@@ -1,12 +1,19 @@
 #!/usr/bin/env bash
 # Full local gate in one command: compile + tests (incl. golden suites) +
-# Verify/oracle at sf0.01 + flagship smoke. Bench is separate (slow):
+# benchmark-harness tests + Verify/oracle at sf0.01 + flagship smoke. Bench
+# is separate (slow):
 #   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench"
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 echo "== sbt test =="
 sbt -batch test 2>&1 | grep -E "Tests:|All tests passed|FAILED" | tail -3
+
+# The benchmark harness calls engine APIs (SparkBoot.builder, GraftSession,
+# the wire servers) and nothing else compiles it: build and test it against
+# this tree so an engine API change cannot break the benchmark unseen.
+echo "== perfbench harness: compile + test =="
+(cd perfbench/harness && sbt -batch perfbench/test 2>&1 | grep -E "Tests:|All tests passed|FAILED" | tail -3)
 
 echo "== Verify + DuckDB oracle (sf0.01) =="
 rm -rf /tmp/vout

@@ -26,14 +26,13 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = SparkBoot.cpus
-    val spark = SparkBoot.install(
-      SparkBoot.builder("graft-bench")
-        // Reference arithmetic wraps (u64 sums, numbers_overflow.rs
-        // semantics); at 10B rows sum(number) exceeds Int64 so ANSI would
-        // (correctly) refuse — the throughput comparison needs reference
-        // semantics.
-        .config("spark.sql.ansi.enabled", "false")
-        .getOrCreate())
+    val spark = SparkBoot.builder("graft-bench")
+      // Reference arithmetic wraps (u64 sums, numbers_overflow.rs
+      // semantics); at 10B rows sum(number) exceeds Int64 so ANSI would
+      // (correctly) refuse — the throughput comparison needs reference
+      // semantics.
+      .config("spark.sql.ansi.enabled", "false")
+      .getOrCreate()
 
     // Spill accounting for the constrained-heap protocol (PERFNOTES):
     // task-level memory/disk spill totals across the whole suite — zero at

@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.server.{ClickHouseServer, HttpApiServer, MySqlServer}
-import graft.sql.GraftSession
 
 /** Network front-door main — boots one SparkSession and serves the engine
   * over both wire protocols plus the HTTP admin/metrics API, the
@@ -24,15 +21,8 @@ object Serve {
   def main(args: Array[String]): Unit = {
     val mysqlPort = args.lift(0).map(_.toInt).getOrElse(3307)
     val chPort = args.lift(1).map(_.toInt).getOrElse(9001)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      String.valueOf(Runtime.getRuntime.availableProcessors))
-    val spark = GraftSession.tuned(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkBoot.builder("graft-serve").getOrCreate()
     args.lift(2).foreach(dir => graft.tables.Tables.registerAll(spark, dir))
-    GraftSession.cached(spark) // strategies + functions + trace listener
     val httpPort = args.lift(3).map(_.toInt).getOrElse(8080)
     val my = new MySqlServer(spark, mysqlPort)
     val ch = new ClickHouseServer(spark, chPort)

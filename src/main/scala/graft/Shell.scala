@@ -2,8 +2,6 @@ package graft
 
 import scala.io.StdIn
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sql.{GraftSession, Render}
 import graft.tables.Tables
 
@@ -25,12 +23,7 @@ object Shell {
       case dir :: Nil => (Some(dir), None)
       case _ => (None, None)
     }
-    val spark = GraftSession.tuned(
-        SparkSession.builder().master(
-          s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)}]")
-          .appName("graft-shell").config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkBoot.builder("graft-shell").getOrCreate()
     val g = GraftSession(spark)
     sfDir.foreach(dir => Tables.registerAll(spark, dir))
 

@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session bootstrap shared by the driver-contract mains (Verify, Bench) and
-  * dev tools.
+/** The one session builder: the driver-contract mains (Verify, Bench), the
+  * front doors (Serve, Shell), EntrySmoke, the tests and the dev tools all
+  * build through [[SparkBoot.builder]], which applies [[GraftExtensions]]
+  * (rules, strategies, functions) to every session it makes.
   *
   * The default master is `local[cpus]` (the sandbox has one machine), but the
   * 100 TB design claim needs at least one run where task closures, broadcast
@@ -43,8 +45,10 @@ object SparkBoot {
   def builder(appName: String): SparkSession.Builder = {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     val b = SparkSession.builder()
+      .withExtensions(GraftExtensions)
       .appName(appName)
       .master(master)
+      .config("spark.log.level", "WARN")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -80,13 +84,5 @@ object SparkBoot {
         // with none running; chaos kills are continuous by design
         .config("spark.deploy.maxExecutorRetries", "-1")
     } else b2
-  }
-
-  def install(spark: SparkSession): SparkSession = {
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TopKStrategy.install(spark)
-    graft.plans.CountFromStats.install(spark)
-    graft.plans.RangeAggStrategy.install(spark)
-    spark
   }
 }

@@ -2,7 +2,7 @@ package graft.dev
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Dev-only: generate an ORGANIC sf directory (default sf=1) with the same
   * schema and per-column distributions as the driver's testdata
@@ -124,14 +124,9 @@ object OrganicGen {
     val dst = args.headOption.getOrElse("/tmp/graft-organic-sf1")
     val sf = if (args.length > 1) args(1).toDouble else 1.0
     val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.SparkBoot.builder("graft-organic-gen")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     val nCust = (150000 * sf).toLong

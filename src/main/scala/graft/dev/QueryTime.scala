@@ -1,24 +1,12 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: time individual SparkEntry queries at an sf dir.
   * Usage: runMain graft.dev.QueryTime <sfDir> <name> [<name>...] */
 object QueryTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TopKStrategy.install(spark)
-    graft.plans.CountFromStats.install(spark)
-    graft.plans.RangeAggStrategy.install(spark)
+    val spark = graft.SparkBoot.builder("graft-query-time").getOrCreate()
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       val t0 = System.nanoTime()

@@ -32,8 +32,7 @@ import graft.ext.{Dedup, RecallFloors}
 object RecallAudit {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkBoot.install(
-      SparkBoot.builder("graft-recall-audit").getOrCreate())
+    val spark = SparkBoot.builder("graft-recall-audit").getOrCreate()
     try {
       val docs = graft.tables.Tables.table(spark, dir, "documents")
       // the exact q45 inventory (inverted-index join — the pair set is

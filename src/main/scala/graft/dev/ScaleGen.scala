@@ -1,6 +1,6 @@
 package graft.dev
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only: scale an sf directory N× (default: sf0.1 → "sf1" under /tmp)
@@ -48,13 +48,7 @@ object ScaleGen {
     val copies = if (args.length > 2) args(2).toInt else 10
     val dupPermille = if (args.length > 3) args(3).toInt else 0
     val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkBoot.builder("graft-scale-gen").getOrCreate()
 
     def rd(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
 

@@ -1,6 +1,6 @@
 package graft.dev
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only: 1000× scale receipts for the three scale-critical kernels
@@ -50,15 +50,7 @@ object ScaleReceipt {
     val wanted: Set[String] =
       if (args.length > 1) args(1).split(',').toSet
       else Set("cc", "ccstar", "neardup", "pctl")
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TopKStrategy.install(spark)
+    val spark = graft.SparkBoot.builder("graft-scale-receipt").getOrCreate()
 
     val memSpilled = new java.util.concurrent.atomic.AtomicLong
     val diskSpilled = new java.util.concurrent.atomic.AtomicLong

@@ -41,15 +41,14 @@ object StreamChaos {
     StructField("user_id", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType), StructField("props", StringType)))
 
-  private def boot(chaos: Boolean): SparkSession = SparkBoot.install(
-    SparkBoot.builder("graft-stream-chaos")
-      .config("spark.graft.chaos.enabled", chaos.toString)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .getOrCreate())
+  private def boot(chaos: Boolean): SparkSession = SparkBoot.builder("graft-stream-chaos")
+    .config("spark.graft.chaos.enabled", chaos.toString)
+    .config("spark.sql.shuffle.partitions", "8")
+    .config("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+      "true")
+    .getOrCreate()
 
   /** Time-ordered multi-chunk copy of `events` → 12 micro-batches under
     * maxFilesPerTrigger=1: enough batches that a ~30 s chaos schedule lands

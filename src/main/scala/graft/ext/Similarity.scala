@@ -1816,7 +1816,8 @@ object Similarity {
     * bucket equi-join carrying only id/bucket longs, embeddings rejoin
     * once on the deduplicated pairs, exact cosine decides. Measured recall
     * vs the exact twin at threshold 0.45: 1.000 at every test scale
-    * (sf0.001/0.01/0.1 — DetPlaneSim grid; ExtSpec pins a 0.95 floor).
+    * (sf0.001/0.01/0.1 — the plane-grid simulation of commit 4fec09b;
+    * ExtSpec pins a 0.95 floor).
     * planes=6 is deliberately LOOSER than production's auto rule: 0.45
     * cosine is a wide net (a plane splits such a pair with p≈0.35), so
     * radius-1 blind flips need coarse buckets where the production

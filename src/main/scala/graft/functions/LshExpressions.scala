@@ -270,8 +270,9 @@ object LshKernel {
   * one table (q50's deterministic twin measured 0.14 where independent
   * tables predict ~0.9). Squaring mod the prime breaks the affine relation
   * (quadratic residues), and measured recall matches the independence
-  * prediction (DetPlaneSim: near-dup recall 1.000 at planes=6/tables=16 at
-  * every test scale, vs 0.43–0.67 linear). Keys
+  * prediction (plane-grid simulation, commit 4fec09b: near-dup recall
+  * 1.000 at planes=6/tables=16 at every test scale, vs 0.43–0.67
+  * linear). Keys
   * pack as `(table << 20) | bucket`. `flips = false` emits one key per
   * table (corpus side); `flips = true` adds every radius-1 bit flip
   * (query side, `planes + 1` keys per table — blind flips, not

@@ -35,8 +35,4 @@ object UniqExactAggregator extends Aggregator[Long, Set[Long], Long] {
 
   /** Typed-column form for Dataset aggregation. */
   def column: Column = udaf(this).apply(org.apache.spark.sql.functions.col("value"))
-
-  /** Register as a SQL/DataFrame function on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.udf.register("uniq_exact_state", udaf(this))
 }

@@ -48,7 +48,4 @@ object VecSumAggregator extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {
 
   /** `vec_sum(col)` as a DataFrame aggregation column. */
   def sum(c: Column): Column = udaf(this).apply(c)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.udf.register("vec_sum", udaf(this))
 }

@@ -23,8 +23,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
   *
   * Conservative match: exactly one aggregate = count(constant), no GROUP BY,
   * no DISTINCT, no filter anywhere between the aggregate and the scan, no
-  * partition pruning in play. Installed via
-  * `spark.experimental.extraOptimizations` (GraftSession does this).
+  * partition pruning in play. Injected as an optimizer rule by
+  * [[graft.GraftExtensions]].
   */
 object CountFromStats extends Rule[LogicalPlan] {
 
@@ -73,10 +73,4 @@ object CountFromStats extends Rule[LogicalPlan] {
     }
     Some(total)
   } catch { case _: Throwable => None }
-
-  /** Install on a session (idempotent). */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 }

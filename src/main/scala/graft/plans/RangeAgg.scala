@@ -642,10 +642,4 @@ object RangeAggStrategy extends SparkStrategy {
       }
     case _ => Nil
   }
-
-  /** Install on a session (idempotent). */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(this))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ this
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
@@ -509,10 +508,10 @@ private[plans] object PrimitiveTopK {
 
 /** Planner strategy: `ORDER BY <single non-nullable primitive attribute>
   * LIMIT k` → [[PrimitiveTopKPartialExec]] (codegen'd per-partition heap)
-  * + [[PrimitiveTopKExec]] (driver merge). Registered ahead of the built-in
-  * `SpecialLimits` via `spark.experimental.extraStrategies`, so it takes the
-  * plan only when the narrow fast-path preconditions hold; everything else
-  * falls through to `TakeOrderedAndProjectExec` untouched.
+  * + [[PrimitiveTopKExec]] (driver merge). Injected by [[graft.GraftExtensions]]
+  * ahead of the built-in `SpecialLimits`, so it takes the plan only when the
+  * narrow fast-path preconditions hold; everything else falls through to
+  * `TakeOrderedAndProjectExec` untouched.
   *
   * Nullable keys are excluded on purpose: NULLS FIRST/LAST cannot be encoded
   * into the mapped key without colliding with Long.{Min,Max}Value, and a
@@ -549,10 +548,4 @@ object TopKStrategy extends SparkStrategy {
       topK(k, order.head, Some(plist), child) :: Nil
     case _ => Nil
   }
-
-  /** Install on a session (idempotent). */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(this))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ this
 }

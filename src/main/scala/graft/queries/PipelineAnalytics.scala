@@ -547,7 +547,8 @@ private[queries] object PipelineAnalytics {
       // round 11 removes the object buffer entirely — one map-combinable
       // freq agg + one windowed cumsum + a ≤2-rows-per-group bracket agg,
       // the only shape whose per-task state is O(1) at 100 TB
-      // (dev/Q131Probe has the paired timings; answers bit-identical).
+      // (PERFNOTES.md "Round 11: q131's exact side" has the paired
+      // timings; answers bit-identical).
       val li = t(s, dir, "lineitem")
       val sketch = li.groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),

@@ -2,12 +2,13 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.atomic.AtomicLong
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
 import graft.sql.GraftSession
+import graft.sql.Render.{jsonString => jStr}
+import graft.tables.SystemTables
 
 /** HTTP admin + observability front door — the reference's third entry
   * point, restated over JDK's built-in HTTP server (no extra deps):
@@ -23,8 +24,9 @@ import graft.sql.GraftSession
   *     `{name, priority, address}` JSON body (api/http/v1/cluster.rs:24)
   *   - `GET /metrics`    → Prometheus text format (the reference runs a
   *     prometheus exporter as a sibling server, metric_service.rs:30):
-  *     query counters from a QueryExecutionListener, the `system.tracing`
-  *     ring depth, and JVM heap/GC gauges.
+  *     the process-wide query counters the `system.tracing` listener keeps
+  *     (every session, wire connections included), the ring depth, and JVM
+  *     heap/GC gauges.
   *
   * The reference's `/debug/home` + pprof handlers are deliberately out of
   * scope: pprof is a CPU-profile format of the Rust runtime; the JVM-side
@@ -335,45 +337,7 @@ class HttpApiServer(spark: SparkSession, port: Int = 0) {
     }
   }
 
-  // ---- query metrics ----------------------------------------------------
-
-  private val queriesTotal = new AtomicLong
-  private val queryFailures = new AtomicLong
-  private val queryRows = new AtomicLong
-  private val queryNanos = new AtomicLong
-
-  private def installMetricsListener(): Unit =
-    spark.listenerManager.register(
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit = {
-          queriesTotal.incrementAndGet()
-          queryNanos.addAndGet(durationNs)
-          val rows = qe.executedPlan.metrics.get("numOutputRows")
-            .map(_.value).getOrElse(0L)
-          if (rows > 0) queryRows.addAndGet(rows)
-        }
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            ex: Exception): Unit = {
-          queriesTotal.incrementAndGet()
-          queryFailures.incrementAndGet()
-        }
-      })
-
-  // ---- JSON helpers (emit by hand; parse via Spark's bundled Jackson) ---
-
-  private def jStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  // ---- JSON input (parsed with Spark's bundled Jackson) -----------------
 
   private def parseNode(body: String): Either[String, (String, Long, String)] =
     try {
@@ -431,18 +395,18 @@ class HttpApiServer(spark: SparkSession, port: Int = 0) {
       sb.append(s"# HELP $name $help\n# TYPE $name $tpe\n$name $v\n")
     }
     m("graft_queries_total", "Completed query executions (incl. failures).",
-      "counter", queriesTotal.get)
+      "counter", SystemTables.queriesTotal.get)
     m("graft_query_failures_total", "Failed query executions.",
-      "counter", queryFailures.get)
+      "counter", SystemTables.queryFailures.get)
     m("graft_query_rows_total", "Rows produced by completed executions.",
-      "counter", queryRows.get)
+      "counter", SystemTables.queryRows.get)
     m("graft_query_seconds_total", "Wall seconds spent in completed executions.",
-      "counter", queryNanos.get / 1e9)
+      "counter", SystemTables.queryNanos.get / 1e9)
     // ring depth read directly — a Spark action here would fire the
     // QueryExecutionListener and inflate the counters this page reports
     // (and bill every Prometheus scrape one Spark job)
     m("graft_tracing_events", "Events currently in the system.tracing ring.",
-      "gauge", graft.tables.SystemTables.tracingDepth(spark))
+      "gauge", SystemTables.tracingDepth(spark))
     val mem = java.lang.management.ManagementFactory.getMemoryMXBean
       .getHeapMemoryUsage
     m("jvm_heap_used_bytes", "Used JVM heap.", "gauge", mem.getUsed)
@@ -458,7 +422,7 @@ class HttpApiServer(spark: SparkSession, port: Int = 0) {
 
   def start(): Int = synchronized {
     require(server == null, "HttpApiServer already started")
-    installMetricsListener()
+    SystemTables.installTraceListener(spark)
     server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/v1/hello", (ex: HttpExchange) =>
       handle(ex) { json(ex, 200, hello) })

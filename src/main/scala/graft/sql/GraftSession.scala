@@ -2,9 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graft.Bridge
 
-import graft.functions.HashExpressions
 import graft.tables.SystemTables
 
 /** The engine's SQL entry point — the Spark restatement of the reference's
@@ -15,10 +13,11 @@ import graft.tables.SystemTables
   *     combinator suffixes, system tables, `CREATE TABLE ... ENGINE = ...`)
   *     and delegates everything else to Spark SQL — SELECT/INSERT/DDL/SET/
   *     EXPLAIN/DESCRIBE/USE are native;
-  *   - scalar functions the reference ships that Spark lacks are registered
-  *     as Catalyst expressions (siphash64, simhash64) so SQL text can call
-  *     them inside whole-stage codegen;
   *   - system tables register as `system_*` views (SystemTables).
+  *
+  * Functions, rules and strategies are not wired here: every session built
+  * by [[graft.SparkBoot.builder]] already carries them
+  * ([[graft.GraftExtensions]]).
   *
   * Interpreter dispatch (interpreters/interpreter_factory.rs) and the
   * optimizer (optimizers/optimizer.rs) have no code here on purpose: Catalyst
@@ -32,10 +31,6 @@ class GraftSession(val spark: SparkSession) {
   // profiling finding. Reference semantics are unchanged: a scan reads
   // live metadata, because the view re-registers right before each use.
   SystemTables.installTraceListener(spark)
-  GraftSession.registerFunctions(spark)
-  graft.plans.CountFromStats.install(spark)
-  graft.plans.TopKStrategy.install(spark)
-  graft.plans.RangeAggStrategy.install(spark)
 
   /** `CREATE TABLE name (cols) ENGINE = CSV|Parquet|Memory|Null
     * [location = 'p'] [has_header = true]` (sql/sql_parser.rs:126-186,
@@ -389,11 +384,10 @@ object GraftSession {
   def apply(spark: SparkSession): GraftSession = new GraftSession(spark)
 
   /** One dialect session per SparkSession (weakly held): construction
-    * registers the function registry and installs the planner strategies
-    * (system views register lazily on use — the catalog enumeration that
-    * once cost ~2-3 s per construction is gone). Driver queries that
-    * enter through the SQL front door share the cached instance the way a
-    * real application holds one session. */
+    * installs the query listener (system views register lazily on use — the
+    * catalog enumeration that once cost ~2-3 s per construction is gone).
+    * Driver queries that enter through the SQL front door share the cached
+    * instance the way a real application holds one session. */
   private val sessions = new java.util.WeakHashMap[SparkSession, GraftSession]
 
   def cached(spark: SparkSession): GraftSession = sessions.synchronized {
@@ -408,9 +402,9 @@ object GraftSession {
     * per session): `root.newSession()` shares the SparkContext, cached
     * blocks and the persistent catalog, but owns its SQLConf, current
     * database, temp views and function registry — so one connection's
-    * `USE db` / `SET x = y` is invisible to every other connection.
-    * Construction re-registers the graft function surface on the new
-    * session's own registry (driver-local map inserts, microseconds). */
+    * `USE db` / `SET x = y` is invisible to every other connection. The
+    * new session carries the graft functions, rules and strategies
+    * already ([[graft.GraftExtensions]]). */
   def forConnection(root: SparkSession): GraftSession = {
     val s = root.newSession()
     // a fresh session starts from SparkConf defaults, not the root's RUNTIME
@@ -481,87 +475,4 @@ object GraftSession {
       }
       m
     }
-
-  /** Recommended scale configuration: AQE with skew handling (runtime
-    * re-plan replaces the reference's static ScattersOptimizer,
-    * optimizer_scatters.rs), shuffle parallelism sized to the machine
-    * (reference `max_threads`, settings.rs:21), and split sizes that keep a
-    * partition's working set in executor memory at 100 TB. */
-  def tunedConf(cores: Int = Runtime.getRuntime.availableProcessors): Map[String, String] = Map(
-    "spark.sql.adaptive.enabled" -> "true",
-    "spark.sql.adaptive.skewJoin.enabled" -> "true",
-    "spark.sql.shuffle.partitions" -> cores.toString,
-    "spark.sql.files.maxPartitionBytes" -> "256m",
-    "spark.sql.session.timeZone" -> "UTC")
-
-  def tuned(b: SparkSession.Builder, cores: Int = Runtime.getRuntime.availableProcessors): SparkSession.Builder =
-    tunedConf(cores).foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
-
-  /** Reference scalar functions absent from Spark, as codegen'd Catalyst
-    * expressions (scalars/hashes/siphash.rs; SimHash is our 100TB-dedup
-    * extension). */
-  def registerFunctions(spark: SparkSession): Unit = {
-    Bridge.registerFunction(spark, "siphash64",
-      { case Seq(e) => HashExpressions.SipHash64(e) })
-    Bridge.registerFunction(spark, "siphash",
-      { case Seq(e) => HashExpressions.SipHash64(e) })
-    Bridge.registerFunction(spark, "simhash64",
-      { case Seq(e) => HashExpressions.SimHash64(e) })
-    Bridge.registerFunction(spark, "totypename",
-      { case Seq(e) => HashExpressions.TypeName(e) })
-    // sleep(seconds) (udfs/sleep.rs): per-invocation delay, capped — the
-    // reference sleeps once per block; distributed eval sleeps per row, so
-    // the cap keeps a stray `SELECT sleep(1) FROM big` from wedging executors
-    // (SURVEY.md §7.4 documents the divergence). crashme()/example() are
-    // test scaffolding, deliberately not ported.
-    // Pipeline scalar surface: the ext/ kernels, SQL-reachable — the
-    // reference's model is a rich scalar registry (function_factory.rs);
-    // ours extends it with the 100TB-pipeline functions. Kernel-backed
-    // entries stay codegen'd; Column-composed helpers register as
-    // macro-style builders (the builder inlines the composed expression
-    // tree — still whole-stage-codegen'd, never a UDF).
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.IntegerType
-    import graft.ext.{TextAnalysis => TA, Vectors}
-    def lint(e: org.apache.spark.sql.catalyst.expressions.Expression): Int = e match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"expected an integer literal, got $other")
-    }
-    Bridge.registerFunction(spark, "simhash60md5",
-      { case Seq(e) => HashExpressions.SimHash60(e) })
-    Bridge.registerFunction(spark, "minhash32",
-      { case Seq(e) => HashExpressions.MinHash32(e) })
-    Bridge.registerFunction(spark, "word_ngrams",
-      { case Seq(e, n) => graft.functions.TextExpressions.WordNgrams(e, lint(n)) })
-    Bridge.registerFunction(spark, "word_ngram_hashes",
-      { case Seq(e, n) => graft.functions.TextExpressions.WordNgramHashes(e, lint(n)) })
-    Bridge.registerFunction(spark, "dot_product",
-      { case Seq(a, b) => graft.functions.DotProduct(a, b) })
-    Bridge.registerFunction(spark, "hashed_margin",
-      { case Seq(e, b) => HashExpressions.LinearMarginExpr(e, lint(b)) })
-    def macroFn(name: String,
-        f: Seq[org.apache.spark.sql.Column] => org.apache.spark.sql.Column): Unit =
-      Bridge.registerFunction(spark, name,
-        exprs => Bridge.sessionExpression(spark, f(exprs.map(Bridge.column))))
-    macroFn("cosine_sim", { case Seq(a, b) => Vectors.cosine(a, b) })
-    macroFn("vec_norm", { case Seq(a) => Vectors.norm(a) })
-    macroFn("token_count", { case Seq(e) => TA.tokenCount(e) })
-    macroFn("bpeish_token_count", { case Seq(e) => TA.bpeishTokenCount(e) })
-    macroFn("quality_score", { case Seq(e) => TA.qualityScore(e) })
-    macroFn("alpha_ratio", { case Seq(e) => TA.alphaRatio(e) })
-    macroFn("stopword_ratio", { case Seq(e) => TA.stopwordRatio(e) })
-    macroFn("mean_token_len", { case Seq(e) => TA.meanTokenLen(e) })
-    macroFn("lang_id", { case Seq(e) => TA.langId(e) })
-    macroFn("content_fingerprint", { case Seq(e) => TA.contentFingerprint(e) })
-    macroFn("rolling_fingerprint", { case Seq(e) => TA.rollingFingerprint(e) })
-    macroFn("redact_pii", { case Seq(e) => TA.redactPii(e) })
-    graft.functions.UniqExactAggregator.register(spark)
-    graft.functions.VecSumAggregator.register(spark)
-    spark.udf.register("sleep", (secs: Double) => {
-      require(secs >= 0, "sleep: negative duration")
-      Thread.sleep(math.min((secs * 1000).toLong, 30000L))
-      0.toShort
-    })
-  }
 }

@@ -20,6 +20,20 @@ object Render {
   def row(r: Row): String =
     (0 until r.length).map(i => value(r.get(i))).mkString("\t")
 
+  /** `s` as a JSON string literal for the JSON the engine writes by hand
+    * (the HTTP API, Verify's oracle_sql.json). Escapes every control char:
+    * a tab or CR in query text would otherwise break the reader's parse. */
+  def jsonString(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
   private def renderFloat(d: Double): String =
     if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString
     else BigDecimal(d).bigDecimal.stripTrailingZeros.toPlainString

@@ -1,6 +1,10 @@
 package graft.tables
 
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The reference's virtual system database
   * (fusequery/query/src/datasources/system/system_database.rs:19-58):
@@ -111,30 +115,41 @@ object SystemTables {
     }
   }
 
-  /** Install the action-completion listener once per session (idempotent).
-    * QueryExecutionListener events arrive asynchronously on the listener
-    * bus; readers of `system.tracing` see completed actions on the next
-    * scan, exactly as the reference sees flushed log lines. */
-  private val listenerInstalled = java.util.Collections.synchronizedMap(
+  /** Process-wide query totals across every session the recorder is
+    * installed on (the wire connections' sessions included) — what
+    * `/metrics` exports. */
+  val queriesTotal = new AtomicLong
+  val queryFailures = new AtomicLong
+  val queryRows = new AtomicLong
+  val queryNanos = new AtomicLong
+
+  /** The engine's one QueryExecutionListener: each action completion lands
+    * a `system.tracing` row on its session and bumps the process-wide
+    * totals. Events arrive asynchronously on the listener bus; readers of
+    * `system.tracing` see completed actions on the next scan, exactly as
+    * the reference sees flushed log lines. */
+  private final class QueryRecorder(spark: SparkSession) extends QueryExecutionListener {
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+      val rows = qe.executedPlan.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)
+      queriesTotal.incrementAndGet()
+      queryNanos.addAndGet(durationNs)
+      if (rows > 0) queryRows.addAndGet(rows)
+      trace(spark, s"action $funcName: $rows rows, cost ${durationNs / 1000000} ms")
+    }
+    override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit = {
+      queriesTotal.incrementAndGet()
+      queryFailures.incrementAndGet()
+      trace(spark, s"action $funcName FAILED: ${ex.getMessage}", 50)
+    }
+  }
+
+  private val recorded = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
 
+  /** Install the [[QueryRecorder]] once per session (idempotent). */
   def installTraceListener(spark: SparkSession): Unit =
-    if (listenerInstalled.putIfAbsent(spark, java.lang.Boolean.TRUE) == null)
-      spark.listenerManager.register(
-        new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit = {
-            val rows = qe.executedPlan.metrics.get("numOutputRows")
-              .map(_.value).getOrElse(-1L)
-            trace(spark,
-              s"action $funcName: $rows rows, cost ${durationNs / 1000000} ms")
-          }
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              ex: Exception): Unit =
-            trace(spark, s"action $funcName FAILED: ${ex.getMessage}", 50)
-        })
+    if (recorded.putIfAbsent(spark, java.lang.Boolean.TRUE) == null)
+      spark.listenerManager.register(new QueryRecorder(spark))
 
   /** Current ring depth WITHOUT a Spark action — metrics endpoints must not
     * fire the very QueryExecutionListener whose counters they report. */

@@ -2,6 +2,8 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{classic, Column}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
+import org.apache.spark.sql.expressions.{SparkUserDefinedFunction, UserDefinedAggregator, UserDefinedFunction}
 
 /** Spark 4 made `Column` connect-agnostic and hid the Column↔Expression
   * bridge behind `private[sql]` (`classic.ExpressionUtils`). Custom Catalyst
@@ -39,12 +41,22 @@ object Bridge {
       schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 
-  /** Register a Catalyst-expression-backed SQL function on a session (the
-    * reference registers scalar functions in a name→ctor factory map,
-    * common/functions/src/scalars/function_factory.rs:30-36; this is the
-    * Spark-session equivalent). Stays codegen'd — unlike `spark.udf`. */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
+  /** SQL function builder for a Column-composed function: the builder
+    * inlines the composed expression tree at analysis (macro-style — still
+    * whole-stage-codegen'd, never a UDF), converted by the session that is
+    * analysing the statement. */
+  def columnFunction(f: Seq[Column] => Column): Seq[Expression] => Expression =
+    exprs => sessionExpression(org.apache.spark.sql.SparkSession.active, f(exprs.map(column)))
+
+  /** SQL function builder for a Scala UDF or Aggregator UDAF — what
+    * `spark.udf.register` installs, without needing a session. */
+  def udfFunction(name: String, f: UserDefinedFunction): Seq[Expression] => Expression =
+    f.withName(name) match {
+      case a: UserDefinedAggregator[_, _, _] => ScalaAggregator(a, _)
+      case u: SparkUserDefinedFunction => children => {
+        if (children.length != u.inputEncoders.size) throw new IllegalArgumentException(
+          s"$name takes ${u.inputEncoders.size} argument(s), got ${children.length}")
+        classic.UserDefinedFunctionUtils.toScalaUDF(u, children)
+      }
+    }
 }

@@ -3,17 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.CountFromStats
-
 /** The count-from-statistics rewrite (optimizer_statistics_exact.rs port):
   * bare count(*) over parquet answers from footers; anything filtered,
   * grouped, or distinct must still scan. */
 class CountFromStatsSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = TestSpark.spark
-    CountFromStats.install(s)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
   private def li = graft.tables.Tables.table(spark, TestSpark.sfDir, "lineitem")
 

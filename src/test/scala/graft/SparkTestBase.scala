@@ -6,21 +6,11 @@ import org.apache.spark.sql.SparkSession
   * all suites in one JVM) — Spark sessions are expensive; reuse like the
   * reference reuses one FuseQueryContext per test binary. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.plans.TopKStrategy.install(s)
-    graft.plans.CountFromStats.install(s)
-    graft.plans.RangeAggStrategy.install(s)
-    s
-  }
+  lazy val spark: SparkSession = SparkBoot.builder("graft-test")
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+    .getOrCreate()
   val sfDir = "/root/testdata/sf0.001"
 }
