@@ -1,24 +1,35 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import Vectors._
 
 /** Approximate-nearest-neighbor search over embedding columns
-  * (`array<float>`).
+  * (`array<float>`), plus the embedding audits built on the same pieces.
   *
-  *   - [[bruteForceTopK]] is the exact baseline: broadcast the (small) query
-  *     set against the corpus, rank by cosine per query. The corpus side
-  *     streams — no shuffle of the 100 TB table, one window per query
-  *     partition.
-  *   - [[lshTopK]] is the scale path: random-hyperplane LSH — both sides
-  *     hash to sign-pattern buckets, candidates meet in a bucket equi-join
-  *     (shuffle is on bucket keys only), then exact cosine re-ranks. Recall
-  *     is tuned by `planes` (bucket granularity) vs corpus density.
+  * Every top-k entry point is one kernel — a candidate generator proposes
+  * (query, corpus) pairs, then ONE exact re-rank scores each pair by cosine
+  * and keeps the top k per query by (sim DESC, c_id). The generators:
+  *   - all pairs: [[bruteForceTopK]], the exact baseline — the (small)
+  *     query set broadcasts against the streaming corpus, no shuffle of the
+  *     corpus side;
+  *   - prefix-cosine survivors: [[truncatedRerank]];
+  *   - LSH bucket meets: [[lshTopK]] (seeded random hyperplanes) and
+  *     [[lshTopKDeterministic]] (integer formula planes) — both sides hash
+  *     to sign-pattern buckets, candidates meet in a bucket equi-join;
+  *   - IVF probed cells: [[ivfTopK]]/[[ivfHardNegatives]] (untrained
+  *     cosine cells), [[ivfTopKTrained]] and [[searchIvfIndex]] (Lloyd
+  *     cells, integer-L2 probes);
+  *   - PQ asymmetric-distance survivors: [[pqTopK]], [[ivfPqTopK]] and
+  *     [[searchPqIndex]] — a per-query lookup table scores compressed
+  *     codes, the `kCand` best per query go on to the re-rank.
   *
-  * Hyperplanes are generated from a fixed seed — signatures are deterministic
-  * across runs and executors.
+  * The integer paths share one quantizer (`floor(quant·x)` longs), one
+  * L2 cell probe and one ADC stage, so an index written to tables and the
+  * in-memory search compute the same rows. Hyperplanes and centroids are
+  * deterministic across runs and executors.
   */
 object Similarity {
 
@@ -53,22 +64,9 @@ object Similarity {
 
   /** Exact top-k cosine neighbors for each query vector (brute force).
     * `queries` must be small enough to broadcast. Self-matches excluded. */
-  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    // Norms are hoisted to the row side of each input — the join computes
-    // ONE dot product per pair, not three (dot + both norms).
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-      norm(col("embedding")).as("q_n"))
-    val c = corpus.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-      norm(col("embedding")).as("c_n"))
-    val scored = c.join(broadcast(q), col("q_id") =!= col("c_id"))
-      .withColumn("sim",
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_n") * col("c_n")), 5))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("c_id"), col("sim"), col("rnk").cast("long").as("rnk"))
-  }
+  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    topKBySim(side(corpus, "c")
+      .join(broadcast(side(queries, "q")), col("q_id") =!= col("c_id")), k)
 
   /** Margin-based bitext mining (Artetxe & Schwenk, ACL'19 — the
     * LASER/CCMatrix alignment rule): a candidate pair (x, y) is a mined
@@ -363,8 +361,7 @@ object Similarity {
   def groupCentroidSimilarity(df: DataFrame, group: Column,
       embedding: Column, quant: Double = 1e6): DataFrame = {
     val sums = df.select(group.as("g"),
-        posexplode(transform(toDouble(embedding),
-          x => floor(x * quant).cast("long"))).as(Seq("d", "v")))
+        posexplode(qvOf(embedding, quant)).as(Seq("d", "v")))
       .groupBy(col("g"), col("d")).agg(sum(col("v")).as("sv"))
     val pairs = sums.as("a").join(sums.as("b"),
         col("a.d") === col("b.d") && col("a.g") <= col("b.g"))
@@ -422,12 +419,9 @@ object Similarity {
     val asg = graft.ops.Checkpoints.truncate(
       emb.filter(col("label").isNotNull)
         .select(col("vec_id"), col("label").cast("long").as("label"),
-          transform(toDouble(col("embedding")),
-            x => floor(x * 1e6).cast("long")).as("qv"))
+          qvOf(col("embedding"), 1e6).as("qv"))
         .select(col("vec_id"), col("label"),
-          slice(array_sort(array(cents.indices.map(i =>
-            struct(sqDist(col("qv"), cents(i)).as("d"),
-              lit(i.toLong).as("c"))): _*)), 1, 2).as("t2"))
+          slice(array_sort(cellDists(col("qv"), cents)), 1, 2).as("t2"))
         .select(col("vec_id"), col("label"),
           col("t2").getItem(0).getField("c").as("cell"),
           col("t2").getItem(0).getField("d").as("d1"),
@@ -478,8 +472,7 @@ object Similarity {
   def centroidShift(emb: DataFrame, label: Column, half: Column,
       quant: Double = 1e3): DataFrame = {
     val q = emb.select(label.as("lab"), half.cast("long").as("h"),
-      transform(toDouble(col("embedding")),
-        x => floor(x * quant).cast("long")).as("qv"))
+      qvOf(col("embedding"), quant).as("qv"))
     val agg = q.groupBy(col("lab"), col("h"))
       .agg(count(lit(1)).as("n"),
         graft.functions.VecSumAggregator.sum(col("qv")).as("s"))
@@ -588,25 +581,15 @@ object Similarity {
     require(k >= 1 && dPrefix >= 1 && kCand >= k,
       "truncatedRerank: need k >= 1, dPrefix >= 1, kCand >= k")
     def pre(e: Column): Column = slice(e, 1, dPrefix)
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-      norm(col("embedding")).as("q_n"), norm(pre(col("embedding"))).as("q_pn"))
-    val c = corpus.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-      norm(col("embedding")).as("c_n"), norm(pre(col("embedding"))).as("c_pn"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id"))
+    val q = side(queries, "q", norm(pre(col("embedding"))).as("q_pn"))
+    val c = side(corpus, "c", norm(pre(col("embedding"))).as("c_pn"))
+    val w = Window.partitionBy(col("q_id")).orderBy(col("psim").desc, col("c_id"))
     val cand = c.join(broadcast(q), col("q_id") =!= col("c_id"))
       .withColumn("psim", round(
         dot(pre(col("q_emb")), pre(col("c_emb"))) / (col("q_pn") * col("c_pn")), 5))
-      .withColumn("prnk",
-        row_number().over(w.orderBy(col("psim").desc, col("c_id"))))
+      .withColumn("prnk", row_number().over(w))
       .filter(col("prnk") <= kCand)
-    cand
-      .withColumn("sim",
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_n") * col("c_n")), 5))
-      .withColumn("rnk",
-        row_number().over(w.orderBy(col("sim").desc, col("c_id"))))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("c_id"), col("sim"), col("rnk").cast("long").as("rnk"))
+    topKBySim(cand, k)
   }
 
   /** Deduplicated LSH candidate pairs (pre-re-rank): corpus vectors sharing
@@ -615,11 +598,9 @@ object Similarity {
     * tests independently of recall. */
   def lshCandidates(queries: DataFrame, corpus: DataFrame,
       planes: Int, tables: Int, dim: Int, probes: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-      norm(col("embedding")).as("q_n"),
+    val q = side(queries, "q",
       explode(lshProbeKeys(col("embedding"), planes, tables, dim, probes)).as("bkt"))
-    val c = corpus.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-      norm(col("embedding")).as("c_n"),
+    val c = side(corpus, "c",
       explode(lshTableKeys(col("embedding"), planes, tables, dim)).as("bkt"))
     c.join(broadcast(q), Seq("bkt"))
       .filter(col("q_id") =!= col("c_id"))
@@ -637,16 +618,8 @@ object Similarity {
     * setting: ~2.5× the recall per candidate examined. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       planes: Int = 10, tables: Int = 12, dim: Int = 64,
-      probes: Int = 16): DataFrame = {
-    val scored = lshCandidates(queries, corpus, planes, tables, dim, probes)
-      .withColumn("sim",
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_n") * col("c_n")), 5))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("c_id"), col("sim"), col("rnk").cast("long").as("rnk"))
-  }
+      probes: Int = 16): DataFrame =
+    topKBySim(lshCandidates(queries, corpus, planes, tables, dim, probes), k)
 
   /** Deterministic-plane multi-table LSH ANN — the oracle-expressible twin
     * of [[lshTopK]] (q49, whose seeded hyperplanes are engine-internal).
@@ -668,24 +641,13 @@ object Similarity {
   def lshTopKDeterministic(queries: DataFrame, corpus: DataFrame, k: Int,
       planes: Int = 6, tables: Int = 20, dim: Int = 64): DataFrame = {
     import graft.functions.LshExpressions.lshKeysDeterministic
-    val c = corpus.select(col("vec_id").as("c_id"),
-      col("embedding").as("c_emb"), norm(col("embedding")).as("c_n"),
-      explode(lshKeysDeterministic(col("embedding"), planes, tables, dim,
-        flips = false)).as("bkt"))
-    val q = queries.select(col("vec_id").as("q_id"),
-      col("embedding").as("q_emb"), norm(col("embedding")).as("q_n"),
-      explode(lshKeysDeterministic(col("embedding"), planes, tables, dim,
-        flips = true)).as("bkt"))
-    val scored = c.join(broadcast(q), Seq("bkt"))
+    val c = side(corpus, "c", explode(lshKeysDeterministic(col("embedding"),
+      planes, tables, dim, flips = false)).as("bkt"))
+    val q = side(queries, "q", explode(lshKeysDeterministic(col("embedding"),
+      planes, tables, dim, flips = true)).as("bkt"))
+    topKBySim(c.join(broadcast(q), Seq("bkt"))
       .filter(col("q_id") =!= col("c_id"))
-      .dropDuplicates("q_id", "c_id")
-      .withColumn("sim",
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_n") * col("c_n")), 5))
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))
-    scored.withColumn("rnk", row_number().over(win))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("c_id"), col("sim"), col("rnk").cast("long").as("rnk"))
+      .dropDuplicates("q_id", "c_id"), k)
   }
 
   /** IVF (inverted-file) ANN top-k: the corpus is partitioned into `nlist`
@@ -725,21 +687,10 @@ object Similarity {
 
   private def ivfTopKImpl(queries: DataFrame, corpus: DataFrame, k: Int,
       nlist: Int, nprobe: Int, hardNeg: Boolean): DataFrame = {
-    // `filter(vec_id < nlist)`, NOT `orderBy(vec_id).limit(nlist)`: the
-    // filter pushes down to the parquet scan (row-group pruning via min/max
-    // stats — nearly free on a range-clustered layout), where a TakeOrdered
-    // would scan the whole corpus to fetch nlist known ids. The collect is
-    // bounded (<= nlist rows) and legitimate: centroids must become codegen
-    // literals. Local sort keeps centroid order deterministic.
-    val cents: Array[Seq[Double]] = corpus
-      .filter(col("vec_id") < nlist)
-      .select(col("vec_id"), toDouble(col("embedding"))).collect()
-      .sortBy(_.getLong(0))
-      .map { r =>
-        val v = r.getSeq[Double](1)
-        val n = math.sqrt(v.map(x => x * x).sum)
-        v.map(x => if (n == 0) 0.0 else x / n)
-      }
+    val cents: Array[Seq[Double]] = lowIdVectors(corpus, nlist).map { case (_, v) =>
+      val n = math.sqrt(v.map(x => x * x).sum)
+      v.map(x => if (n == 0) 0.0 else x / n)
+    }
 
     def cellScores(vec: Column): Column =
       array(cents.toIndexedSeq.map(c => dot(vec, typedlit(c))): _*)
@@ -755,7 +706,7 @@ object Similarity {
     // first-occurrence argmax and the file-wide tie convention (a plain
     // (s, i) sort would probe the HIGHEST tied cell and miss vectors
     // assigned to the lowest)
-    def probeCells(vec: Column): Column = {
+    def topCosCells(vec: Column): Column = {
       val scored = zip_with(cellScores(vec),
         sequence(lit(0), lit(cents.length - 1)),
         (s, i) => struct(s.as("s"), (-i).as("ni")))
@@ -763,31 +714,18 @@ object Similarity {
         e => (-e("ni")).cast("int"))
     }
 
-    val cBase = Seq(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-      norm(col("embedding")).as("c_n"), nearestCell(col("embedding")).as("cell"))
-    val qBase = Seq(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-      norm(col("embedding")).as("q_n"),
-      explode(probeCells(col("embedding"))).as("cell"))
-    val c = corpus.select(
-      (if (hardNeg) cBase :+ col("label").as("c_label") else cBase): _*)
-    val q = queries.select(
-      (if (hardNeg) qBase :+ col("label").as("q_label") else qBase): _*)
+    def label(p: String): Seq[Column] =
+      if (hardNeg) Seq(col("label").as(s"${p}_label")) else Nil
+    val c = side(corpus, "c",
+      nearestCell(col("embedding")).as("cell") +: label("c"): _*)
+    val q = side(queries, "q",
+      explode(topCosCells(col("embedding"))).as("cell") +: label("q"): _*)
     val cand = c.join(broadcast(q), Seq("cell"))
       .filter(col("q_id") =!= col("c_id"))
-    val scored = (if (hardNeg) cand.filter(col("q_label") =!= col("c_label"))
-                  else cand)
-      .withColumn("sim",
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_n") * col("c_n")), 5))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))
-    val ranked = scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
     if (hardNeg)
-      ranked.select(col("q_id"), col("q_label"), col("c_id"), col("c_label"),
-        col("sim"), col("rnk").cast("long").as("rnk"))
-    else
-      ranked.select(col("q_id"), col("c_id"), col("sim"),
-        col("rnk").cast("long").as("rnk"))
+      topKBySim(cand.filter(col("q_label") =!= col("c_label")), k,
+        Seq(col("q_id"), col("q_label"), col("c_id"), col("c_label")))
+    else topKBySim(cand, k)
   }
 
   /** Distributed Lloyd k-means fit — the IVF index-BUILD path ([[ivfTopK]]
@@ -817,15 +755,113 @@ object Similarity {
     * Returns one row per vector: (vec_id, cell, dist) under the FINAL
     * centroids, `dist` the integer squared-L2 in quantized space.
     */
+  /** `floor(quant·x)` longs of an embedding column — the integer space
+    * every cross-engine-exact path computes in. */
+  private def qvOf(e: Column, quant: Double): Column =
+    transform(toDouble(e), x => floor(x * quant).cast("long"))
+
   /** Quantized-integer view of an embedding frame: (vec_id, qv). */
   private def quantized(emb: DataFrame, quant: Double): DataFrame =
-    emb.select(col("vec_id"),
-      transform(toDouble(col("embedding")), x => floor(x * quant).cast("long")).as("qv"))
+    emb.select(col("vec_id"), qvOf(col("embedding"), quant).as("qv"))
 
   /** Integer squared-L2 to a literal centroid. */
   private def sqDist(v: Column, c: Seq[Long]): Column =
     aggregate(zip_with(v, typedlit(c), (a, b) => (a - b) * (a - b)),
       lit(0L), (acc, x) => acc + x)
+
+  /** (dist, cell) structs of `v` against every literal centroid. */
+  private def cellDists(v: Column, cents: Array[Seq[Long]]): Column =
+    array(cents.indices.map(i =>
+      struct(sqDist(v, cents(i)).as("d"), lit(i.toLong).as("c"))): _*)
+
+  /** The `nprobe` nearest cells by (dist, cell): an ascending sort of the
+    * scored structs — integer order, ties to the lowest cell. */
+  private def probeCellsL2(v: Column, cents: Array[Seq[Long]],
+      nprobe: Int): Column =
+    transform(slice(array_sort(cellDists(v, cents)), 1, nprobe),
+      e => e.getField("c"))
+
+  /** The `n` lowest-id vectors as (vec_id, doubles) in id order — the
+    * deterministic untrained-centroid pick. `filter(vec_id < n)`, NOT
+    * `orderBy(vec_id).limit(n)`: the filter pushes down to the parquet scan
+    * (row-group pruning via min/max stats — nearly free on a
+    * range-clustered layout), where a TakeOrdered would scan the whole
+    * corpus to fetch n known ids. The collect is bounded (<= n rows) and
+    * legitimate: centroids must become codegen literals. */
+  private def lowIdVectors(df: DataFrame, n: Int): Array[(Long, Seq[Double])] =
+    df.filter(col("vec_id") < n)
+      .select(col("vec_id"), toDouble(col("embedding"))).collect()
+      .sortBy(_.getLong(0))
+      .map(r => (r.getLong(0), r.getSeq[Double](1)))
+
+  /** One side of a similarity join: (`p_id`, `p_emb`, `p_n`), then
+    * `extra`. The norm is hoisted to the row side, so the join computes ONE
+    * dot product per pair, not three (dot + both norms). */
+  private def side(df: DataFrame, p: String, extra: Column*): DataFrame =
+    df.select(Seq(col("vec_id").as(s"${p}_id"), col("embedding").as(s"${p}_emb"),
+      norm(col("embedding")).as(s"${p}_n")) ++ extra: _*)
+
+  /** Cosine of a (q, c) pair of [[side]] rows, rounded to 5. */
+  private def pairSim: Column =
+    round(dot(col("q_emb"), col("c_emb")) / (col("q_n") * col("c_n")), 5)
+
+  /** The exact re-rank every top-k entry point ends in: cosine per
+    * candidate pair, top `k` per query by (sim DESC, c_id). Returns
+    * (`out`…, sim, rnk). */
+  private def topKBySim(pairs: DataFrame, k: Int,
+      out: Seq[Column] = Seq(col("q_id"), col("c_id"))): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))
+    pairs.withColumn("sim", pairSim)
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select(out :+ col("sim") :+ col("rnk").cast("long").as("rnk"): _*)
+  }
+
+  /** Quantized subspace `j` (`subDim` dims) of the embedding column. */
+  private def subspace(subDim: Int, quant: Double)(j: Int): Column =
+    qvOf(slice(col("embedding"), j * subDim + 1, subDim), quant)
+
+  /** All `m` per-subspace `ksub`-entry codebooks of `sub(j)` over the rows
+    * of `df` ([[lloydBooksQ]], trained in lockstep on the exploded long
+    * form `(vec_id, j, qv)`). Driver-held: m × ksub × subDim longs. */
+  private def pqBooks(df: DataFrame, m: Int, ksub: Int, iters: Int,
+      sub: Int => Column): Seq[Array[Seq[Long]]] =
+    lloydBooksQ(df.select(col("vec_id"), inline(array((0 until m).map(j =>
+        struct(lit(j.toLong).as("j"), sub(j).as("qv"))): _*))),
+      m, ksub, iters).toSeq
+
+  /** PQ codes of every row, long form (`keys`…, j, code): per subspace the
+    * nearest book entry, ties to the lowest. A pure map over book
+    * literals. */
+  private def pqEncode(df: DataFrame, books: Seq[Array[Seq[Long]]],
+      sub: Int => Column, keys: Column*): DataFrame =
+    df.select(keys :+ inline(array(books.indices.map(j =>
+      struct(lit(j.toLong).as("j"),
+        bestCell(sub(j), books(j)).getField("c").as("code"))): _*)): _*)
+
+  /** Per-query ADC lookup table (`keys`…, j, code, d): the integer
+    * distance from each query subspace to each book entry. */
+  private def adcLut(queries: DataFrame, books: Seq[Array[Seq[Long]]],
+      sub: Int => Column, keys: Column*): DataFrame =
+    queries.select(keys :+ inline(array((for {
+      j <- books.indices; c <- books(j).indices
+    } yield struct(lit(j.toLong).as("j"), lit(c.toLong).as("code"),
+      sqDist(sub(j), books(j)(c)).as("d"))): _*)): _*)
+
+  /** The ADC scan and its exact re-rank: codes meet the broadcast LUT on
+    * `keyCols`, each (query, vector) sums its m looked-up distances, the
+    * `kCand` smallest by (adc, c_id) per query survive, and [[topKBySim]]
+    * re-ranks them at full dimension from `emb`. */
+  private def adcTopK(codes: DataFrame, lut: DataFrame, keyCols: Seq[String],
+      emb: DataFrame, kCand: Int, k: Int): DataFrame = {
+    val wc = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("c_id"))
+    val cand = codes.join(broadcast(lut), keyCols)
+      .filter(col("q_id") =!= col("c_id"))
+      .groupBy(col("q_id"), col("c_id")).agg(sum(col("d")).as("adc"))
+      .withColumn("crn", row_number().over(wc))
+      .filter(col("crn") <= kCand).select(col("q_id"), col("c_id"))
+    topKBySim(cand.join(side(emb, "q"), "q_id").join(side(emb, "c"), "c_id"), k)
+  }
 
   /** (dist, cell) struct min = nearest centroid, ties to the LOWEST cell.
     * Two spellings of the same arithmetic: centroid LITERALS unrolled into
@@ -837,8 +873,7 @@ object Similarity {
     * SemDedup blocking ([[semDedupClustersFor]]). */
   private def bestCell(v: Column, cents: Array[Seq[Long]]): Column =
     if (cents.length <= 16)
-      array_min(array(cents.indices.map(i =>
-        struct(sqDist(v, cents(i)).as("d"), lit(i.toLong).as("c"))): _*))
+      array_min(cellDists(v, cents))
     else if (cents.length <= 256)
       graft.functions.VectorExpressions.nearestCell(v, cents)
     else
@@ -924,14 +959,6 @@ object Similarity {
     books
   }
 
-  /** Exploded long form `(vec_id, j, qv)` for [[lloydBooksQ]]: one row per
-    * vector per subspace, built in a single pass. */
-  private def subspaceLongForm(df: DataFrame, m: Int,
-      qvOf: Int => Column): DataFrame =
-    df.select(col("vec_id"), explode(array((0 until m).map(j =>
-        struct(lit(j.toLong).as("j"), qvOf(j).as("qv"))): _*)).as("e"))
-      .select(col("vec_id"), col("e.j").as("j"), col("e.qv").as("qv"))
-
   def kmeansFit(emb: DataFrame, k: Int, iters: Int,
       quant: Double = 1e6): DataFrame = {
     val cents = lloydCentroids(emb, k, iters, quant)
@@ -955,30 +982,10 @@ object Similarity {
       nlist: Int = 16, nprobe: Int = 4, iters: Int = 2,
       quant: Double = 1e6): DataFrame = {
     val cents = lloydCentroids(corpus, nlist, iters, quant)
-    // top-nprobe cells by (dist, cell): ascending sort of the scored struct
-    // array — integer order, deterministic everywhere
-    def probeCells(v: Column): Column =
-      transform(
-        slice(array_sort(array(cents.indices.map(i =>
-          struct(sqDist(v, cents(i)).as("d"), lit(i.toLong).as("c"))): _*)), 1, nprobe),
-        e => e.getField("c"))
-    def qv(e: Column): Column =
-      transform(toDouble(e), x => floor(x * quant).cast("long"))
-    val c = corpus.select(col("vec_id").as("c_id"),
-      col("embedding").as("c_emb"), norm(col("embedding")).as("c_n"),
-      bestCell(qv(col("embedding")), cents).getField("c").as("cell"))
-    val q = queries.select(col("vec_id").as("q_id"),
-      col("embedding").as("q_emb"), norm(col("embedding")).as("q_n"),
-      explode(probeCells(qv(col("embedding")))).as("cell"))
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("sim",
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_n") * col("c_n")), 5))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("c_id"), col("sim"), col("rnk").cast("long").as("rnk"))
+    val qv = qvOf(col("embedding"), quant)
+    val c = side(corpus, "c", bestCell(qv, cents).getField("c").as("cell"))
+    val q = side(queries, "q", explode(probeCellsL2(qv, cents, nprobe)).as("cell"))
+    topKBySim(c.join(broadcast(q), Seq("cell")).filter(col("q_id") =!= col("c_id")), k)
   }
 
   /** Product-quantization ANN (Jégou et al. 2011, "Product Quantization for
@@ -1005,49 +1012,11 @@ object Similarity {
   def pqTopK(emb: DataFrame, k: Int, m: Int = 4, subDim: Int = 16,
       ksub: Int = 8, iters: Int = 2, nq: Int = 10, kCand: Int = 20,
       quant: Double = 1e6): DataFrame = {
-    def sub(j: Int): Column = slice(col("embedding"), j * subDim + 1, subDim)
-    def qvOf(e: Column): Column =
-      transform(toDouble(e), x => floor(x * quant).cast("long"))
-    // per-subspace codebooks (driver-held: m × ksub × subDim longs),
-    // all m trained in lockstep: iters driver round trips, not m·iters
-    val books: Seq[Array[Seq[Long]]] =
-      lloydBooksQ(subspaceLongForm(emb, m, j => qvOf(sub(j))),
-        m, ksub, iters).toSeq
-    // corpus codes: per subspace, nearest codebook entry (ties → lowest)
-    val codes = emb.select(col("vec_id").as("c_id") +: (0 until m).map(j =>
-      bestCell(qvOf(sub(j)), books(j)).getField("c").as(s"code$j")): _*)
-    val codesLong = codes.select(col("c_id"), explode(array((0 until m).map(j =>
-      struct(lit(j.toLong).as("j"), col(s"code$j").as("code"))): _*)).as("e"))
-      .select(col("c_id"), col("e.j"), col("e.code"))
-    // per-query ADC lookup table: nq × m × ksub integer distances
-    val lut = emb.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("q_id"), explode(array((for {
-        j <- 0 until m; c <- 0 until ksub
-      } yield struct(lit(j.toLong).as("j"), lit(c.toLong).as("code"),
-        sqDist(qvOf(sub(j)), books(j)(c)).as("d"))): _*)).as("e"))
-      .select(col("q_id"), col("e.j"), col("e.code"), col("e.d"))
-    val adc = codesLong.join(broadcast(lut), Seq("j", "code"))
-      .filter(col("q_id") =!= col("c_id"))
-      .groupBy(col("q_id"), col("c_id")).agg(sum(col("d")).as("adc"))
-    val wc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("adc"), col("c_id"))
-    val cand = adc.withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= kCand).select(col("q_id"), col("c_id"))
-    // exact cosine re-rank of the ADC survivors only
-    val sides = emb.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nn"))
-    val scored = cand
-      .join(sides.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nn").as("q_n")), "q_id")
-      .join(sides.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-        col("nn").as("c_n")), "c_id")
-      .withColumn("sim",
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_n") * col("c_n")), 5))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("c_id"), col("sim"), col("rnk").cast("long").as("rnk"))
+    val sub = subspace(subDim, quant) _
+    val books = pqBooks(emb, m, ksub, iters, sub)
+    adcTopK(pqEncode(emb, books, sub, col("vec_id").as("c_id")),
+      adcLut(emb.filter(col("vec_id") < nq), books, sub, col("vec_id").as("q_id")),
+      Seq("j", "code"), emb, kCand, k)
   }
 
   /** PQ-encode a (possibly STREAMING) frame of embeddings against
@@ -1059,16 +1028,9 @@ object Similarity {
   def pqCodeColumns(vectors: DataFrame, trainCorpus: DataFrame,
       m: Int, subDim: Int, ksub: Int, iters: Int,
       quant: Double = 1e6): DataFrame = {
-    def sub(j: Int): Column = slice(col("embedding"), j * subDim + 1, subDim)
-    def qvOf(e: Column): Column =
-      transform(toDouble(e), x => floor(x * quant).cast("long"))
-    val books: Seq[Array[Seq[Long]]] =
-      lloydBooksQ(subspaceLongForm(trainCorpus, m, j => qvOf(sub(j))),
-        m, ksub, iters).toSeq
-    vectors.select(col("vec_id").as("c_id"), explode(array((0 until m).map(j =>
-        struct(lit(j.toLong).as("j"),
-          bestCell(qvOf(sub(j)), books(j)).getField("c").as("code"))): _*)).as("e"))
-      .select(col("c_id"), col("e.j"), col("e.code"))
+    val sub = subspace(subDim, quant) _
+    pqEncode(vectors, pqBooks(trainCorpus, m, ksub, iters, sub), sub,
+      col("vec_id").as("c_id"))
   }
 
   /** SemDedup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -1235,64 +1197,26 @@ object Similarity {
   def ivfPqTopK(emb: DataFrame, k: Int, nlist: Int = 8, nprobe: Int = 4,
       m: Int = 4, subDim: Int = 16, ksub: Int = 8, iters: Int = 2,
       nq: Int = 10, kCand: Int = 20, quant: Double = 1e6): DataFrame = {
-    def qvOf(e: Column): Column =
-      transform(toDouble(e), x => floor(x * quant).cast("long"))
     val cents = lloydCentroids(emb, nlist, iters, quant)
     val centLit = typedlit(cents.map(_.toSeq).toSeq) // array<array<long>>
-    val q0 = emb.select(col("vec_id"), qvOf(col("embedding")).as("qv"))
-    val assigned = q0
-      .withColumn("cell", bestCell(col("qv"), cents).getField("c"))
-      .withColumn("rv", zip_with(col("qv"),
-        element_at(centLit, (col("cell") + 1).cast("int")), (a, b) => a - b))
+    // rv = qv minus its row's `cell` centroid
+    def residual(df: DataFrame): DataFrame = df.withColumn("rv", zip_with(col("qv"),
+      element_at(centLit, (col("cell") + 1).cast("int")), (a, b) => a - b))
+    val q0 = quantized(emb, quant)
+    val assigned =
+      residual(q0.withColumn("cell", bestCell(col("qv"), cents).getField("c")))
     def rSlice(j: Int): Column = slice(col("rv"), j * subDim + 1, subDim)
     // m residual codebooks are independent: ONE (j, cell) aggregation per
     // Lloyd round trains them all (was m sequential loops = the measured
     // ~6 s driver-round-trip floor on q157)
-    val books: Seq[Array[Seq[Long]]] =
-      lloydBooksQ(subspaceLongForm(assigned, m, rSlice),
-        m, ksub, iters).toSeq
-    val codes = assigned.select(col("vec_id").as("c_id"), col("cell"),
-        explode(array((0 until m).map(j =>
-          struct(lit(j.toLong).as("j"),
-            bestCell(rSlice(j), books(j)).getField("c").as("code"))): _*)).as("e"))
-      .select(col("c_id"), col("cell"), col("e.j"), col("e.code"))
+    val books = pqBooks(assigned, m, ksub, iters, rSlice)
     // query probes + per-probed-cell residuals
-    def probeCells(v: Column): Column =
-      transform(
-        slice(array_sort(array(cents.indices.map(i =>
-          struct(sqDist(v, cents(i)).as("d"), lit(i.toLong).as("c"))): _*)), 1, nprobe),
-        e => e.getField("c"))
-    val qprobe = q0.filter(col("vec_id") < nq)
+    val qprobe = residual(q0.filter(col("vec_id") < nq)
       .select(col("vec_id").as("q_id"), col("qv"),
-        explode(probeCells(col("qv"))).as("cell"))
-      .withColumn("rv", zip_with(col("qv"),
-        element_at(centLit, (col("cell") + 1).cast("int")), (a, b) => a - b))
-    val lut = qprobe.select(col("q_id"), col("cell"), explode(array((for {
-        j <- 0 until m; c <- 0 until ksub
-      } yield struct(lit(j.toLong).as("j"), lit(c.toLong).as("code"),
-        sqDist(rSlice(j), books(j)(c)).as("d"))): _*)).as("e"))
-      .select(col("q_id"), col("cell"), col("e.j"), col("e.code"), col("e.d"))
-    val adc = codes.join(broadcast(lut), Seq("cell", "j", "code"))
-      .filter(col("q_id") =!= col("c_id"))
-      .groupBy(col("q_id"), col("c_id")).agg(sum(col("d")).as("adc"))
-    val wc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("adc"), col("c_id"))
-    val cand = adc.withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= kCand).select(col("q_id"), col("c_id"))
-    val sides = emb.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nn"))
-    val scored = cand
-      .join(sides.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nn").as("q_n")), "q_id")
-      .join(sides.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-        col("nn").as("c_n")), "c_id")
-      .withColumn("sim",
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_n") * col("c_n")), 5))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("c_id"), col("sim"), col("rnk").cast("long").as("rnk"))
+        explode(probeCellsL2(col("qv"), cents, nprobe)).as("cell")))
+    adcTopK(pqEncode(assigned, books, rSlice, col("vec_id").as("c_id"), col("cell")),
+      adcLut(qprobe, books, rSlice, col("q_id"), col("cell")),
+      Seq("cell", "j", "code"), emb, kCand, k)
   }
 
   /** Persist a PQ index as TABLES — [[writeIvfIndex]]'s build-once/
@@ -1305,12 +1229,8 @@ object Similarity {
   def writePqIndex(corpus: DataFrame, path: String, m: Int = 4,
       subDim: Int = 16, ksub: Int = 8, iters: Int = 2): Unit = {
     val spark = corpus.sparkSession
-    def sub(j: Int): Column = slice(col("embedding"), j * subDim + 1, subDim)
-    def qvOf(e: Column): Column =
-      transform(toDouble(e), x => floor(x * 1e6).cast("long"))
-    val books: Seq[Array[Seq[Long]]] =
-      lloydBooksQ(subspaceLongForm(corpus, m, j => qvOf(sub(j))),
-        m, ksub, iters).toSeq
+    val sub = subspace(subDim, 1e6) _
+    val books = pqBooks(corpus, m, ksub, iters, sub)
     import scala.jdk.CollectionConverters._
     val bookRows: java.util.List[org.apache.spark.sql.Row] = (for {
       j <- 0 until m; c <- 0 until ksub
@@ -1322,10 +1242,7 @@ object Similarity {
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))))
     spark.createDataFrame(bookRows, bookSchema)
       .write.mode("overwrite").parquet(s"$path/books")
-    corpus.select(col("vec_id").as("c_id"), explode(array((0 until m).map(j =>
-        struct(lit(j.toLong).as("j"),
-          bestCell(qvOf(sub(j)), books(j)).getField("c").as("code"))): _*)).as("e"))
-      .select(col("c_id"), col("e.j"), col("e.code"))
+    pqEncode(corpus, books, sub, col("vec_id").as("c_id"))
       .write.mode("overwrite").parquet(s"$path/codes")
   }
 
@@ -1339,39 +1256,14 @@ object Similarity {
       nq: Int = 10, kCand: Int = 20): DataFrame = {
     val bookRows = spark.read.parquet(s"$path/books")
       .collect() // m·ksub rows — bounded by construction
-    val books: Map[(Long, Long), Seq[Long]] =
-      bookRows.map(r => (r.getLong(0), r.getLong(1)) -> r.getSeq[Long](2)).toMap
-    def sub(j: Int): Column = slice(col("embedding"), j * subDim + 1, subDim)
-    def qvOf(e: Column): Column =
-      transform(toDouble(e), x => floor(x * 1e6).cast("long"))
-    val lut = emb.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("q_id"), explode(array((for {
-        j <- 0 until m; c <- 0 until ksub
-      } yield struct(lit(j.toLong).as("j"), lit(c.toLong).as("code"),
-        sqDist(qvOf(sub(j)), books((j.toLong, c.toLong))).as("d"))): _*)).as("e"))
-      .select(col("q_id"), col("e.j"), col("e.code"), col("e.d"))
-    val adc = spark.read.parquet(s"$path/codes")
-      .join(broadcast(lut), Seq("j", "code"))
-      .filter(col("q_id") =!= col("c_id"))
-      .groupBy(col("q_id"), col("c_id")).agg(sum(col("d")).as("adc"))
-    val wc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("adc"), col("c_id"))
-    val cand = adc.withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= kCand).select(col("q_id"), col("c_id"))
-    val sides = emb.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nn"))
-    val scored = cand
-      .join(sides.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nn").as("q_n")), "q_id")
-      .join(sides.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-        col("nn").as("c_n")), "c_id")
-      .withColumn("sim",
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_n") * col("c_n")), 5))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("c_id"), col("sim"), col("rnk").cast("long").as("rnk"))
+    val books: Seq[Array[Seq[Long]]] = Seq.tabulate(m)(j =>
+      bookRows.filter(_.getLong(0) == j).sortBy(_.getLong(1)).map(_.getSeq[Long](2)))
+    require(books.forall(_.length == ksub),
+      s"searchPqIndex: $path does not hold $m books of $ksub entries")
+    val sub = subspace(subDim, 1e6) _
+    adcTopK(spark.read.parquet(s"$path/codes"),
+      adcLut(emb.filter(col("vec_id") < nq), books, sub, col("vec_id").as("q_id")),
+      Seq("j", "code"), emb, kCand, k)
   }
 
   /** Persist an IVF index as TABLES — the build-once/search-many model
@@ -1398,11 +1290,9 @@ object Similarity {
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))))
     spark.createDataFrame(centRows, centSchema)
       .write.mode("overwrite").parquet(s"$path/centroids")
-    def qv(e: Column): Column =
-      transform(toDouble(e), x => floor(x * 1e6).cast("long"))
     val assigned = corpus.select(col("vec_id"), col("embedding"),
       norm(col("embedding")).as("nrm"),
-      bestCell(qv(col("embedding")), cents).getField("c").as("cell"))
+      bestCell(qvOf(col("embedding"), 1e6), cents).getField("c").as("cell"))
     graft.tables.Layout.writeRangeClustered(assigned, s"$path/cells", files,
       Seq(col("cell")))
   }
@@ -1418,31 +1308,15 @@ object Similarity {
       queries: DataFrame, k: Int, nprobe: Int = 4): DataFrame = {
     val cents: Array[Seq[Long]] = spark.read.parquet(s"$path/centroids")
       .collect().sortBy(_.getLong(0)).map(_.getSeq[Long](1))
-    def qv(e: Column): Column =
-      transform(toDouble(e), x => floor(x * 1e6).cast("long"))
-    def probeCells(v: Column): Column =
-      transform(
-        slice(array_sort(array(cents.indices.map(i =>
-          struct(sqDist(v, cents(i)).as("d"), lit(i.toLong).as("c"))): _*)), 1, nprobe),
-        e => e.getField("c"))
-    val q = queries.select(col("vec_id").as("q_id"),
-      col("embedding").as("q_emb"), norm(col("embedding")).as("q_n"),
-      explode(probeCells(qv(col("embedding")))).as("cell"))
+    val q = side(queries, "q",
+      explode(probeCellsL2(qvOf(col("embedding"), 1e6), cents, nprobe)).as("cell"))
     // probed-cell union: bounded by nlist, becomes the pushed scan filter
     val probed = q.select(col("cell")).distinct().collect().map(_.getLong(0))
     val c = spark.read.parquet(s"$path/cells")
       .filter(col("cell").isin(probed.toIndexedSeq: _*))
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
         col("nrm").as("c_n"), col("cell"))
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("sim",
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_n") * col("c_n")), 5))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("c_id"), col("sim"), col("rnk").cast("long").as("rnk"))
+    topKBySim(c.join(broadcast(q), Seq("cell")).filter(col("q_id") =!= col("c_id")), k)
   }
 
   /** Contrastive triplet mining — the training-set assembly step of
@@ -1459,13 +1333,9 @@ object Similarity {
     * paths (q49/q118) unchanged downstream. */
   def contrastiveTriplets(anchors: DataFrame, corpus: DataFrame,
       negCeiling: Double): DataFrame = {
-    val q = anchors.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-      norm(col("embedding")).as("q_n"))
-    val c = corpus.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-      norm(col("embedding")).as("c_n"))
-    val scored = c.join(broadcast(q), col("q_id") =!= col("c_id"))
-      .withColumn("sim",
-        round(dot(col("q_emb"), col("c_emb")) / (col("q_n") * col("c_n")), 5))
+    val scored = side(corpus, "c")
+      .join(broadcast(side(anchors, "q")), col("q_id") =!= col("c_id"))
+      .withColumn("sim", pairSim)
       .select(col("q_id"), col("c_id"), col("sim"))
     scored.groupBy(col("q_id"))
       .agg(
@@ -1488,13 +1358,9 @@ object Similarity {
     * against raw centroid (dot / norms) and rounded to 5 — the exact
     * construction any SQL engine reproduces bit-for-bit. */
   def centroidAssign(emb: DataFrame, nlist: Int = 8): DataFrame = {
-    val cents: Array[(Int, Seq[Double], Double)] = emb
-      .filter(col("vec_id") < nlist)
-      .select(col("vec_id"), toDouble(col("embedding"))).collect()
-      .sortBy(_.getLong(0))
-      .map { r =>
-        val v = r.getSeq[Double](1)
-        (r.getLong(0).toInt, v, math.sqrt(v.map(x => x * x).sum))
+    val cents: Array[(Int, Seq[Double], Double)] =
+      lowIdVectors(emb, nlist).map { case (id, v) =>
+        (id.toInt, v, math.sqrt(v.map(x => x * x).sum))
       }
     // (sim, -cell) struct max = highest sim, ties to the LOWEST cell id
     val scored = array(cents.toIndexedSeq.map { case (i, c, n) =>
@@ -1689,8 +1555,7 @@ object Similarity {
       quant: Double = 1e6): DataFrame = {
     val cents = lloydCentroidsQ(quantized(emb, quant), k, iters)
     val scored = quantized(emb, quant).select(col("vec_id"),
-      array_sort(array(cents.indices.map(i =>
-        struct(sqDist(col("qv"), cents(i)).as("d"), lit(i.toLong).as("c"))): _*)).as("ds"))
+      array_sort(cellDists(col("qv"), cents)).as("ds"))
     scored.select(col("vec_id"),
         col("ds")(0).getField("c").as("cell"),
         col("ds")(0).getField("d").as("a"),
@@ -1784,7 +1649,7 @@ object Similarity {
   def groupCohesion(df: DataFrame, id: Column, group: Column,
       embedding: Column, quant: Double = 1e6): DataFrame = {
     val q = df.select(id.as("vid"), group.as("g"),
-      transform(toDouble(embedding), x => floor(x * quant).cast("long")).as("qv"))
+      qvOf(embedding, quant).as("qv"))
     val ex = q.select(col("vid"), col("g"),
       posexplode(col("qv")).as(Seq("d", "v")))
     val sums = ex.groupBy(col("g"), col("d")).agg(sum(col("v")).as("sv"))

@@ -61,10 +61,7 @@ object DialectQueries {
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), out.schema)
       gs.sql("DROP TABLE IF EXISTS q96_cust_csv")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
+      graft.tables.Hfs.rmTree(new java.io.File(tmp))
       result
     }),
     "q104_sql_pipeline" -> ((s, dir) => {

@@ -603,10 +603,7 @@ private[queries] object PipelineAnalytics {
               col("exact_uniq") * 0.05).cast("int").as("within_tol"))
         materialize(s, out) // 1 row; lets the scratch dir drop
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(tmpRoot.toFile)
+        graft.tables.Hfs.rmTree(tmpRoot.toFile)
       }
     }),
     "q126_retention_delete" -> ((s, dir) => {
@@ -626,10 +623,7 @@ private[queries] object PipelineAnalytics {
           sum(col("n_chars")).as("sum_chars"))
         materialize(s, out) // 1 row; lets the scratch dir drop immediately
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(tmpRoot.toFile)
+        graft.tables.Hfs.rmTree(tmpRoot.toFile)
       }
     }),
     "q123_percentile_gate" -> ((s, dir) => {

@@ -486,10 +486,7 @@ private[queries] object PipelineAnn {
           .orderBy(col("q_id"), col("rnk"))
         materialize(s, out) // bounded (nq*k rows); lets the scratch drop
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(tmpRoot.toFile)
+        graft.tables.Hfs.rmTree(tmpRoot.toFile)
       }
     }),
     "q157_ann_ivfpq" -> ((s, dir) => {
@@ -517,10 +514,7 @@ private[queries] object PipelineAnn {
           Similarity.searchPqIndex(s, tmpRoot.toString, emb, k = 3)
             .orderBy(col("q_id"), col("rnk")))
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(tmpRoot.toFile)
+        graft.tables.Hfs.rmTree(tmpRoot.toFile)
       }
     }),
     "q148_ann_pq" -> ((s, dir) => {

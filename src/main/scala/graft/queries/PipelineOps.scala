@@ -34,11 +34,8 @@ object PipelineOps {
   private[queries] def dropScratch(s: SparkSession, name: String): Unit = {
     s.sql(s"DROP TABLE IF EXISTS $name")
     val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-    }
     val d = new java.io.File(wh, name)
-    if (d.exists) rm(d)
+    if (d.exists) graft.tables.Hfs.rmTree(d)
   }
 
   /** Evaluate `df` eagerly into a local-relation DataFrame (row order kept)

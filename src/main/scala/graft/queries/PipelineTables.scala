@@ -133,10 +133,7 @@ private[queries] object PipelineTables {
             sum(col("doc_id")).as("checksum"))
         materialize(s, out) // 1 row
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
+        graft.tables.Hfs.rmTree(new java.io.File(tmp))
       }
     }),
     "q115_dpp_join" -> ((s, dir) => {
@@ -167,10 +164,7 @@ private[queries] object PipelineTables {
             sum(col("l_orderkey")).as("sum_ok"))
         materialize(s, out) // 1 row; lets the scratch dir drop immediately
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
+        graft.tables.Hfs.rmTree(new java.io.File(tmp))
       }
     }),
     "q117_range_join" -> ((s, dir) => {
@@ -218,10 +212,7 @@ private[queries] object PipelineTables {
           col("doc_id") * 1000003L + col("n_chars"))
         materialize(s, out.orderBy(col("version")))
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(tmpRoot.toFile)
+        graft.tables.Hfs.rmTree(tmpRoot.toFile)
       }
     }),
     "q286_column_diff" -> ((s, dir) => {
@@ -281,10 +272,7 @@ private[queries] object PipelineTables {
           .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("checksum"))
           .orderBy(col("status")))
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(tmpRoot.toFile)
+        graft.tables.Hfs.rmTree(tmpRoot.toFile)
       }
     }),
     "q165_range_join_pairs" -> ((s, dir) => {
@@ -340,10 +328,7 @@ private[queries] object PipelineTables {
             lit(graft.tables.VersionedTable.currentVersion(s, root).get))
         materialize(s, out)
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(tmpRoot.toFile)
+        graft.tables.Hfs.rmTree(tmpRoot.toFile)
       }
     }),
     "q120_upsert" -> ((s, dir) => {
@@ -369,10 +354,7 @@ private[queries] object PipelineTables {
           sum(col("n_chars")).as("sum_chars"))
         materialize(s, out) // 1 row; lets the scratch dir drop immediately
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(tmp).getParentFile)
+        graft.tables.Hfs.rmTree(new java.io.File(tmp).getParentFile)
       }
     }),
     "q121_snapshot_diff" -> ((s, dir) => {
@@ -411,10 +393,7 @@ private[queries] object PipelineTables {
             sum(col("l_partkey")).as("sum_pk"))
         materialize(s, out) // 1 row; lets the scratch dir drop immediately
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
+        graft.tables.Hfs.rmTree(new java.io.File(tmp))
       }
     }),
     "q108_incremental_neardup" -> ((s, dir) => {
@@ -496,10 +475,7 @@ private[queries] object PipelineTables {
             sum(length(col("text"))).as("sum_len"))
           .orderBy(col("lang")))
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
+        graft.tables.Hfs.rmTree(new java.io.File(tmp))
       }
     }),
     "q151_orc_roundtrip" -> ((s, dir) => {
@@ -514,10 +490,7 @@ private[queries] object PipelineTables {
             sum(col("doc_id")).as("checksum"))
           .orderBy(col("lang")))
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
+        graft.tables.Hfs.rmTree(new java.io.File(tmp))
       }
     }),
     "q145_multimodal_imageio" -> ((s, dir) => {

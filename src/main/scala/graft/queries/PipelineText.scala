@@ -621,10 +621,7 @@ private[queries] object PipelineText {
             sum(col("doc_id")).as("checksum"))
           .orderBy(col("lang")))
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
+        graft.tables.Hfs.rmTree(new java.io.File(tmp))
       }
     }),
     "q147_collocations" -> ((s, dir) => {

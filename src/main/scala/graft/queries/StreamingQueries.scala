@@ -54,10 +54,7 @@ object StreamingQueries {
           new java.util.ArrayList[org.apache.spark.sql.Row](
             scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), out.schema)
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(tmpRoot.toFile)
+        graft.tables.Hfs.rmTree(tmpRoot.toFile)
       }
     }),
     "q33_stream_tumbling" -> ((s, dir) => withStatePartitions(s, 4) {

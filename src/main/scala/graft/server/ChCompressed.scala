@@ -1,6 +1,6 @@
 package graft.server
 
-import java.io.{EOFException, InputStream, OutputStream}
+import java.io.{InputStream, OutputStream}
 
 import net.jpountz.lz4.LZ4Factory
 
@@ -97,16 +97,6 @@ object ChCompressed {
     putLongLE(hdr, 8, hi)
     out.write(hdr)
     out.write(body, 0, 9 + cLen)
-  }
-
-  private def readN(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n); var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) throw new EOFException("peer closed inside compressed frame")
-      off += r
-    }
-    buf
   }
 
   /** Sanity bound on a single frame's sizes — a corrupted length field must

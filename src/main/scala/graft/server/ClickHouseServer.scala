@@ -86,15 +86,6 @@ class ClickHouseServer(spark: SparkSession, port: Int = 0,
 
   // ---- primitive codecs ----------------------------------------------------
 
-  private def readN(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n); var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) throw new EOFException("client closed"); off += r
-    }
-    buf
-  }
-
   private def readVarint(in: InputStream): Long = {
     var v = 0L; var shift = 0
     while (true) {

@@ -8,6 +8,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.sql.GraftSession
 import graft.sql.Render.{jsonString => jStr}
+import graft.tables.Hfs.rmTree
 import graft.tables.SystemTables
 
 /** HTTP admin + observability front door — the reference's third entry
@@ -218,10 +219,6 @@ class HttpApiServer(spark: SparkSession, port: Int = 0) {
 
   private def stagingDir(path: String, writer: String) =
     new java.io.File(path, s".graft-staging-$writer")
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rmTree)); f.delete(): Unit
-  }
 
   /** Stage one partition attempt: the gzip ndjson body is re-validated and
     * spooled to disk WITHOUT touching Spark — client write tasks may be

@@ -88,17 +88,6 @@ class MySqlServer(spark: SparkSession, port: Int = 0) {
 
   // ---- packet framing ------------------------------------------------------
 
-  private def readN(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) throw new EOFException("client closed")
-      off += r
-    }
-    buf
-  }
-
   /** Returns (lastSequenceId, payload), reassembling the 16 MB-1
     * continuation convention: a packet of exactly 0xffffff bytes means
     * "more follows"; the logical payload ends at the first shorter packet

@@ -129,10 +129,7 @@ class GraftSession(val spark: SparkSession) {
     if (!exists) {
       // fresh incarnation: a leftover dir from a dropped same-name table
       // must not resurrect its rows
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(dir))
+      graft.tables.Hfs.rmTree(new java.io.File(dir))
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         mapRefTypes(cols).replaceAll("(?i)\\s+not\\s+null", ""))
       srv.registerRemoteTable(key, dir, Some(schema))
@@ -335,10 +332,7 @@ class GraftSession(val spark: SparkSession) {
     if (engines.remove(qual).contains("remote"))
       GraftSession.storeIfStarted(spark).foreach { case (srv, _, root) =>
         srv.dropRemoteTable(s"${db}__$name")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(s"$root/$db/$name"))
+        graft.tables.Hfs.rmTree(new java.io.File(s"$root/$db/$name"))
       }
   }
 

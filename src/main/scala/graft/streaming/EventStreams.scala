@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** Event of the `events` table projected for stateful sessionization. */
@@ -351,24 +351,10 @@ object EventStreams {
         case (k, None) => spark.conf.unset(k)
       }
       // best-effort temp cleanup (tmpfs/tmp either way)
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm))
-        p.delete(): Unit
-      }
-      rm(cp.toFile)
+      graft.tables.Hfs.rmTree(cp.toFile)
     }
     spark.table(name)
   }
-
-  /** File sink: append-mode parquet with a checkpoint — the durable
-    * readStream → transform → writeStream shape. */
-  def startParquetSink(df: DataFrame, path: String, checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    df.writeStream.format("parquet")
-      .option("path", path).option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .start()
 
   /** Streaming CDC apply: every micro-batch reduces to its latest row per
     * `key` (one hash agg) and version-aware-upserts into the parquet
@@ -412,11 +398,7 @@ object EventStreams {
         .start()
       q.awaitTermination()
     } finally {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm))
-        p.delete(): Unit
-      }
-      rm(cp.toFile)
+      graft.tables.Hfs.rmTree(cp.toFile)
     }
   }
 }

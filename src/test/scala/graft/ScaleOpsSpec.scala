@@ -597,6 +597,34 @@ class ScaleOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("persisted PQ index: search equals pqTopK; streaming encoder equals the written codes") {
+    val rnd = new scala.util.Random(11)
+    val emb = (0L until 120L)
+      .map(id => (id, Array.fill(16)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val root = java.nio.file.Files.createTempDirectory("graft-pqidx")
+    try {
+      graft.ext.Similarity.writePqIndex(emb, root.toString, m = 4, subDim = 4,
+        ksub = 6, iters = 2)
+      val viaIndex = graft.ext.Similarity.searchPqIndex(spark, root.toString,
+        emb, k = 3, m = 4, subDim = 4, ksub = 6, nq = 7, kCand = 12)
+      val direct = graft.ext.Similarity.pqTopK(emb, k = 3, m = 4, subDim = 4,
+        ksub = 6, iters = 2, nq = 7, kCand = 12)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("q_id", "rnk").collect().map(_.toString).toSeq
+      assert(rows(viaIndex).length == 21, "7 queries x top-3")
+      assert(rows(viaIndex) == rows(direct),
+        "index round-trip must not change the search result")
+      def codes(df: org.apache.spark.sql.DataFrame) =
+        df.select("c_id", "j", "code").as[(Long, Long, Long)].collect().sorted.toSeq
+      val encoded = graft.ext.Similarity.pqCodeColumns(emb, emb, m = 4,
+        subDim = 4, ksub = 6, iters = 2)
+      assert(codes(encoded).length == 120 * 4)
+      assert(codes(encoded) == codes(spark.read.parquet(s"$root/codes")),
+        "the streaming encoder must reproduce the persisted codes")
+    } finally graft.tables.Hfs.rmTree(root.toFile)
+  }
+
   test("versioned table: pointer-swap commits run the maintenance quartet through a file: FileSystem") {
     import spark.implicits._
     import graft.tables.{Snapshots, VersionedTable}
