@@ -382,8 +382,8 @@ object Bench {
     // includes the complete "queries" map, which has never fit the ~2000-char
     // tail window — but the real reason 12 rounds of parses failed is sbt's
     // "[info] " prefix (fixed in build.sbt via StdoutOutput). Emit the full
-    // line LAST on stdout (and on stderr, and as bench_total.json) so a
-    // last-line JSON parse succeeds wherever the driver reads it from. The
+    // line LAST on stdout, once, flushed before main returns (and as
+    // bench_total.json), so a last-line JSON parse of stdout succeeds. The
     // compact headline line above is unchanged for receipt continuity.
     val fullLine =
       s"""{"metric":"total","unit":"sec","detail":"$detailPath","canary_median":${sec3(canaryMedian)},"canary2_median":${sec3(canary2Median)},"gc_sec":$gcSec,"heap_gb":$heapGb,"spill_mb":$spillMb,"failed":${failed.size},"cpus":$cpus,"reran":${reran.size},"value_min":${sec3(totalMin)},"queries":${jmap(results, sec3)},"sf":"$sfDir","norm_value":${sec3(norm(total))},"value":${sec3(total)}}"""
@@ -391,6 +391,6 @@ object Bench {
       java.nio.file.Paths.get("bench_total.json"), fullLine)
     spark.stop()
     println(fullLine)
-    System.err.println(fullLine)
+    System.out.flush()
   }
 }

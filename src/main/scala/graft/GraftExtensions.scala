@@ -11,9 +11,9 @@ import org.apache.spark.sql.types.IntegerType
 import graft.ext.{TextAnalysis => TA, Vectors}
 import graft.functions.{DotProduct, HashExpressions => H, TextExpressions,
   UniqExactAggregator, VecSumAggregator}
-import graft.plans.{CountFromStats, RangeAggStrategy, TopKStrategy}
+import graft.plans.{CountFromStats, RangeAggStrategy, SortLocalRelation, TopKStrategy}
 
-/** The one place the engine changes a SparkSession: its optimizer rule,
+/** The one place the engine changes a SparkSession: its optimizer rules,
   * planner strategies and SQL functions — the reference keeps the same
   * additions in one optimizer rule list (fusequery/query/src/optimizers/
   * optimizer.rs) and one name→constructor map
@@ -28,6 +28,7 @@ object GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => CountFromStats)
+    ext.injectOptimizerRule(_ => SortLocalRelation)
     ext.injectPlannerStrategy(_ => TopKStrategy)
     ext.injectPlannerStrategy(_ => RangeAggStrategy)
     sqlFunctions.foreach { case (name, builder) =>

@@ -728,33 +728,6 @@ object Similarity {
     else topKBySim(cand, k)
   }
 
-  /** Distributed Lloyd k-means fit — the IVF index-BUILD path ([[ivfTopK]]
-    * deliberately uses untrained lowest-id centroids; this trains them) and
-    * the semantic-clustering trainer behind [[centroidAssign]].
-    *
-    * All arithmetic is exact integer: embeddings quantize once to
-    * `floor(1e6·x)` longs (the q103 construction), distances are integer
-    * squared-L2, and the centroid update is elementwise floor-division of
-    * integer sums — so assignments, centroids, and the returned distances
-    * are bit-identical in any engine and any partitioning (double means
-    * would depend on summation order), and the whole `iters`-round fit is
-    * restatable as unrolled SQL (q114's DuckDB oracle does exactly that).
-    *
-    * Scale shape, per iteration: assignment is a pure map (centroids ride as
-    * codegen literals — k·dim longs); the update is ONE shuffle of k keys
-    * whose map-side partial is k·dim longs per task ([[graft.functions
-    * .VecSumAggregator]] — group state is dimension-sized, not group-sized);
-    * then a ≤k-row collect refreshes the driver-held centroids. No lineage
-    * growth across rounds — each assignment derives from the base scan plus
-    * literals, never from the previous round's DataFrame (the iterative-
-    * lineage OOM class documented on connectedComponents can't arise).
-    * Seeds are the k lowest-id vectors behind a pushed filter (the
-    * [[ivfTopK]] pattern); ties in assignment break to the lowest cell.
-    * Empty cells keep their previous centroid.
-    *
-    * Returns one row per vector: (vec_id, cell, dist) under the FINAL
-    * centroids, `dist` the integer squared-L2 in quantized space.
-    */
   /** `floor(quant·x)` longs of an embedding column — the integer space
     * every cross-engine-exact path computes in. */
   private def qvOf(e: Column, quant: Double): Column =
@@ -959,6 +932,33 @@ object Similarity {
     books
   }
 
+  /** Distributed Lloyd k-means fit — the IVF index-BUILD path ([[ivfTopK]]
+    * deliberately uses untrained lowest-id centroids; this trains them) and
+    * the semantic-clustering trainer behind [[centroidAssign]].
+    *
+    * All arithmetic is exact integer: embeddings quantize once to
+    * `floor(1e6·x)` longs (the q103 construction), distances are integer
+    * squared-L2, and the centroid update is elementwise floor-division of
+    * integer sums — so assignments, centroids, and the returned distances
+    * are bit-identical in any engine and any partitioning (double means
+    * would depend on summation order), and the whole `iters`-round fit is
+    * restatable as unrolled SQL (q114's DuckDB oracle does exactly that).
+    *
+    * Scale shape, per iteration: assignment is a pure map (centroids ride as
+    * codegen literals — k·dim longs); the update is ONE shuffle of k keys
+    * whose map-side partial is k·dim longs per task ([[graft.functions
+    * .VecSumAggregator]] — group state is dimension-sized, not group-sized);
+    * then a ≤k-row collect refreshes the driver-held centroids. No lineage
+    * growth across rounds — each assignment derives from the base scan plus
+    * literals, never from the previous round's DataFrame (the iterative-
+    * lineage OOM class documented on connectedComponents can't arise).
+    * Seeds are the k lowest-id vectors behind a pushed filter (the
+    * [[ivfTopK]] pattern); ties in assignment break to the lowest cell.
+    * Empty cells keep their previous centroid.
+    *
+    * Returns one row per vector: (vec_id, cell, dist) under the FINAL
+    * centroids, `dist` the integer squared-L2 in quantized space.
+    */
   def kmeansFit(emb: DataFrame, k: Int, iters: Int,
       quant: Double = 1e6): DataFrame = {
     val cents = lloydCentroids(emb, k, iters, quant)
@@ -1033,24 +1033,6 @@ object Similarity {
       col("vec_id").as("c_id"))
   }
 
-  /** SemDedup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
-    * web-scale through semantic deduplication" — the public construction):
-    * cluster the embedding space with k-means, then deduplicate ONLY
-    * within clusters — the learned-cell analogue of LSH blocking, with the
-    * pair space bounded by cluster sizes instead of bucket occupancy. The
-    * keep rule here is the deterministic one-pass variant: a vector drops
-    * iff some LOWER-id vector in its cluster is `minCos`-similar (the
-    * "keep the earliest of each near-duplicate set" rule; the
-    * connected-component variant is [[graft.ext.Dedup.connectedComponents]]
-    * over the same pairs). Cell assignment and pair sims are
-    * integer/rounded arithmetic — fully oracle-restatable. Returns the
-    * KEPT vectors as (vec_id, cell).
-    *
-    * Scale knob: at FIXED nClusters the in-cell pair space grows
-    * quadratically with the corpus (measured 4.2× wall at 10× data) —
-    * `nClusters <= 0` lets [[semDedupClustersFor]] scale it with the
-    * corpus (the [[neardupPlanesFor]] lesson), keeping cluster
-    * populations, and the pair space, bounded. */
   /** The scale rule for [[semDedup]]'s cluster count — granularity follows
     * the data, exactly as [[neardupPlanesFor]] does for LSH buckets:
     * k = corpus / targetClusterSize, so expected cluster populations (and
@@ -1156,6 +1138,24 @@ object Similarity {
       cellsPerGroup)
   }
 
+  /** SemDedup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
+    * web-scale through semantic deduplication" — the public construction):
+    * cluster the embedding space with k-means, then deduplicate ONLY
+    * within clusters — the learned-cell analogue of LSH blocking, with the
+    * pair space bounded by cluster sizes instead of bucket occupancy. The
+    * keep rule here is the deterministic one-pass variant: a vector drops
+    * iff some LOWER-id vector in its cluster is `minCos`-similar (the
+    * "keep the earliest of each near-duplicate set" rule; the
+    * connected-component variant is [[graft.ext.Dedup.connectedComponents]]
+    * over the same pairs). Cell assignment and pair sims are
+    * integer/rounded arithmetic — fully oracle-restatable. Returns the
+    * KEPT vectors as (vec_id, cell).
+    *
+    * Scale knob: at FIXED nClusters the in-cell pair space grows
+    * quadratically with the corpus (measured 4.2× wall at 10× data) —
+    * `nClusters <= 0` lets [[semDedupClustersFor]] scale it with the
+    * corpus (the [[neardupPlanesFor]] lesson), keeping cluster
+    * populations, and the pair space, bounded. */
   def semDedup(emb: DataFrame, nClusters: Int, iters: Int,
       minCos: Double, quant: Double = 1e6): DataFrame = {
     val k = if (nClusters > 0) nClusters else semDedupClustersFor(emb.count())
@@ -1374,35 +1374,6 @@ object Similarity {
         col("best.s").as("sim"))
   }
 
-  /** Embedding near-duplicate pairs: cosine ≥ threshold, multi-table
-    * multiprobe LSH-blocked (a pair must meet in some probed bucket of some
-    * table), exact-cosine verified on the deduplicated candidate set.
-    *
-    * Plane choice (planes ≤ 0) = min(occupancy rule, threshold-recall cap)
-    * — see [[neardupPlanesFor]] and [[planesForRecallAt]]. The cap is the
-    * round-11 fix for an audit-measured failure: at organic sf1 the
-    * occupancy rule alone (12 planes) shed 44% of true 0.45-threshold
-    * pairs (RecallAudit, every miss at sim 0.45–0.50); recall at the
-    * REQUESTED angle is now an analytic ≥0.99 guarantee at any corpus
-    * size, and the gate measures it per corpus. Where the cap binds, the
-    * corpus-growth story changes (round-11 ADVICE correction): at
-    * threshold 0.85 with the default 12 tables the cap is 12 planes,
-    * which binds from n ≈ 8·2¹² ≈ 33k rows — past that, per-bucket
-    * occupancy grows linearly with the corpus and the bucket self-join
-    * quadratically (the exact blowup [[neardupPlanesFor]] exists to
-    * prevent; measured 12.8× wall at 10× data). Only tighter thresholds
-    * or more tables push the crossover out (0.95 at 16 tables → cap 25 →
-    * ~10⁸ rows). `tables` is therefore the REQUIRED knob for large
-    * corpora at a given threshold — the cap grows with tables at linear
-    * query-side cost — and the kernel logs a loud warning whenever the
-    * recall cap undercuts the occupancy rule so a large-corpus caller
-    * cannot drift into the quadratic regime silently.
-    *
-    * Shape note: the bucket self-join carries ONLY (vec_id, bucket) longs —
-    * exploding tables×probes keys with the 64-float embedding attached
-    * (the previous formulation) shuffles ~50× the bytes and was the
-    * measured source of run-to-run variance; embeddings rejoin afterwards,
-    * once, on the deduplicated pair ids. */
   /** The COST half of [[embeddingNearDupPairs]]'s plane choice:
     * planes = log2(corpus / targetLoad), floored at 8. Bucket count must
     * grow WITH the corpus — at fixed planes the per-bucket occupancy rises
@@ -1460,6 +1431,35 @@ object Similarity {
     p
   }
 
+  /** Embedding near-duplicate pairs: cosine ≥ threshold, multi-table
+    * multiprobe LSH-blocked (a pair must meet in some probed bucket of some
+    * table), exact-cosine verified on the deduplicated candidate set.
+    *
+    * Plane choice (planes ≤ 0) = min(occupancy rule, threshold-recall cap)
+    * — see [[neardupPlanesFor]] and [[planesForRecallAt]]. The cap is the
+    * round-11 fix for an audit-measured failure: at organic sf1 the
+    * occupancy rule alone (12 planes) shed 44% of true 0.45-threshold
+    * pairs (RecallAudit, every miss at sim 0.45–0.50); recall at the
+    * REQUESTED angle is now an analytic ≥0.99 guarantee at any corpus
+    * size, and the gate measures it per corpus. Where the cap binds, the
+    * corpus-growth story changes (round-11 ADVICE correction): at
+    * threshold 0.85 with the default 12 tables the cap is 12 planes,
+    * which binds from n ≈ 8·2¹² ≈ 33k rows — past that, per-bucket
+    * occupancy grows linearly with the corpus and the bucket self-join
+    * quadratically (the exact blowup [[neardupPlanesFor]] exists to
+    * prevent; measured 12.8× wall at 10× data). Only tighter thresholds
+    * or more tables push the crossover out (0.95 at 16 tables → cap 25 →
+    * ~10⁸ rows). `tables` is therefore the REQUIRED knob for large
+    * corpora at a given threshold — the cap grows with tables at linear
+    * query-side cost — and the kernel logs a loud warning whenever the
+    * recall cap undercuts the occupancy rule so a large-corpus caller
+    * cannot drift into the quadratic regime silently.
+    *
+    * Shape note: the bucket self-join carries ONLY (vec_id, bucket) longs —
+    * exploding tables×probes keys with the 64-float embedding attached
+    * (the previous formulation) shuffles ~50× the bytes and was the
+    * measured source of run-to-run variance; embeddings rejoin afterwards,
+    * once, on the deduplicated pair ids. */
   def embeddingNearDupPairs(emb: DataFrame, threshold: Double,
       planes: Int = 0, tables: Int = 12, dim: Int = 64,
       probes: Int = 16, probeFilter: Option[Column] = None): DataFrame = {
@@ -1564,24 +1564,6 @@ object Similarity {
         "CAST((CAST(b - a AS DECIMAL(38,0)) * 1000000) DIV greatest(b, 1) AS BIGINT)"))
   }
 
-  /** k-occurrence (hubness) audit over cell-blocked kNN — the known
-    * embedding-space pathology where a few "hub" vectors appear in a large
-    * fraction of all nearest-neighbor lists (and their antihubs appear in
-    * none), which silently skews kNN label votes, dedup verdicts, and
-    * retrieval training pairs. Blocking follows [[cellKnnLabelVote]]:
-    * vectors meet only within their trained Lloyd cell (per-cell work
-    * bounded), rank by (cosine DESC, c_id), each vector contributes its
-    * top-k list; occurrence = how many lists a vector appears in (0 for
-    * vectors alone in their cell or never ranked — the antihub signal).
-    * Returns one row per vector: (vec_id, occ).
-    *
-    * `nCells ≤ 0` → [[semDedupClustersFor]] decides (cells ∝ corpus, the
-    * q271 rule): fixed cells make the in-cell pair space quadratic in the
-    * corpus — measured 27.5 s at 10× data with 8 pinned cells vs linear
-    * under the rule. The oracle recomputes the same rule from count(*).
-    *
-    * 100 TB shape: = [[cellKnnLabelVote]] (cell equi-join, window inside
-    * cells) + one count by neighbor id. */
   /** In-cell top-k neighbor lists under trained Lloyd cells — the shared
     * kernel of [[knnOccurrence]] and [[mutualKnnPairs]] (and the same
     * shape [[cellKnnLabelVote]] inlines): vectors meet only within their
@@ -1605,6 +1587,24 @@ object Similarity {
       .select(col("q_id"), col("c_id"), col("sim"), col("rnk"))
   }
 
+  /** k-occurrence (hubness) audit over cell-blocked kNN — the known
+    * embedding-space pathology where a few "hub" vectors appear in a large
+    * fraction of all nearest-neighbor lists (and their antihubs appear in
+    * none), which silently skews kNN label votes, dedup verdicts, and
+    * retrieval training pairs. Blocking follows [[cellKnnLabelVote]]:
+    * vectors meet only within their trained Lloyd cell (per-cell work
+    * bounded), rank by (cosine DESC, c_id), each vector contributes its
+    * top-k list; occurrence = how many lists a vector appears in (0 for
+    * vectors alone in their cell or never ranked — the antihub signal).
+    * Returns one row per vector: (vec_id, occ).
+    *
+    * `nCells ≤ 0` → [[semDedupClustersFor]] decides (cells ∝ corpus, the
+    * q271 rule): fixed cells make the in-cell pair space quadratic in the
+    * corpus — measured 27.5 s at 10× data with 8 pinned cells vs linear
+    * under the rule. The oracle recomputes the same rule from count(*).
+    *
+    * 100 TB shape: = [[cellKnnLabelVote]] (cell equi-join, window inside
+    * cells) + one count by neighbor id. */
   def knnOccurrence(emb: DataFrame, k: Int = 5, nCells: Int = 0,
       iters: Int = 2): DataFrame = {
     val occ = cellKnnLists(emb, k, nCells, iters)
@@ -1666,30 +1666,6 @@ object Similarity {
           5).as("cos"))
   }
 
-  /** Deterministic-plane near-dup pairs — the oracle-expressible twin of
-    * [[embeddingNearDupPairs]], the same relationship
-    * [[lshTopKDeterministic]] has to [[lshTopK]]: plane weights from the
-    * public integer formula, projections in exact integer arithmetic over
-    * `floor(1e6·x)` quantized embeddings, so the candidate set — and with
-    * it the emitted pair set — is bit-identical in ANY engine at ANY
-    * corpus size (q50's DuckDB oracle restates the whole operator; the
-    * pre-round-8 exact-all-pairs oracle was only valid while measured
-    * recall stayed 1.0, which held at sf0.01 and broke at sf0.1).
-    *
-    * Same asymmetric shape as production: base keys on one side, base +
-    * radius-1 flips on the other, (v1 < v2) candidates meet in one packed
-    * bucket equi-join carrying only id/bucket longs, embeddings rejoin
-    * once on the deduplicated pairs, exact cosine decides. Measured recall
-    * vs the exact twin at threshold 0.45: 1.000 at every test scale
-    * (sf0.001/0.01/0.1 — the plane-grid simulation of commit 4fec09b;
-    * ExtSpec pins a 0.95 floor).
-    * planes=6 is deliberately LOOSER than production's auto rule: 0.45
-    * cosine is a wide net (a plane splits such a pair with p≈0.35), so
-    * radius-1 blind flips need coarse buckets where the production
-    * kernel's margin-directed probes can afford tight ones. Fixed default
-    * geometry (the oracle is a static string); at production scale this
-    * twin's pair volume grows superlinearly — hand the job to
-    * [[embeddingNearDupPairs]] (auto-scaled planes, margin probes). */
   /** The AUTO-SCALED near-dup kernel, graded: [[embeddingNearDupPairs]]'s
     * scale structure — [[neardupPlanesFor]] bucket granularity growing with
     * the corpus, the asymmetric probe/base bucket self-join carrying only
@@ -1797,6 +1773,30 @@ object Similarity {
       .select(col("v1"), col("v2"), col("sim"))
   }
 
+  /** Deterministic-plane near-dup pairs — the oracle-expressible twin of
+    * [[embeddingNearDupPairs]], the same relationship
+    * [[lshTopKDeterministic]] has to [[lshTopK]]: plane weights from the
+    * public integer formula, projections in exact integer arithmetic over
+    * `floor(1e6·x)` quantized embeddings, so the candidate set — and with
+    * it the emitted pair set — is bit-identical in ANY engine at ANY
+    * corpus size (q50's DuckDB oracle restates the whole operator; the
+    * pre-round-8 exact-all-pairs oracle was only valid while measured
+    * recall stayed 1.0, which held at sf0.01 and broke at sf0.1).
+    *
+    * Same asymmetric shape as production: base keys on one side, base +
+    * radius-1 flips on the other, (v1 < v2) candidates meet in one packed
+    * bucket equi-join carrying only id/bucket longs, embeddings rejoin
+    * once on the deduplicated pairs, exact cosine decides. Measured recall
+    * vs the exact twin at threshold 0.45: 1.000 at every test scale
+    * (sf0.001/0.01/0.1 — the plane-grid simulation of commit 4fec09b;
+    * ExtSpec pins a 0.95 floor).
+    * planes=6 is deliberately LOOSER than production's auto rule: 0.45
+    * cosine is a wide net (a plane splits such a pair with p≈0.35), so
+    * radius-1 blind flips need coarse buckets where the production
+    * kernel's margin-directed probes can afford tight ones. Fixed default
+    * geometry (the oracle is a static string); at production scale this
+    * twin's pair volume grows superlinearly — hand the job to
+    * [[embeddingNearDupPairs]] (auto-scaled planes, margin probes). */
   def neardupPairsDeterministic(emb: DataFrame, threshold: Double,
       planes: Int = 6, tables: Int = 16, dim: Int = 64): DataFrame = {
     import graft.functions.LshExpressions.lshKeysDeterministic

@@ -188,6 +188,8 @@ case class RangeAggExec(
 
   override def executeCollect(): Array[InternalRow] = Array(resultRow)
   override def executeTake(n: Int): Array[InternalRow] = executeCollect().take(n)
+  // toLocalIterator at the root (the wire servers): the row is already here
+  override def executeToIterator(): Iterator[InternalRow] = executeCollect().iterator
 
   protected override def doExecute(): RDD[InternalRow] =
     sparkContext.parallelize(Seq(resultRow), 1)

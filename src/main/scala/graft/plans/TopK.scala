@@ -411,6 +411,9 @@ case class PrimitiveTopKExec(
   }
 
   override def executeTake(n: Int): Array[InternalRow] = executeCollect().take(n)
+  // toLocalIterator at the root (the wire servers): merge on the driver and
+  // hand the ≤ limit rows over, without doExecute's re-parallelising job
+  override def executeToIterator(): Iterator[InternalRow] = executeCollect().iterator
 
   protected override def doExecute(): RDD[InternalRow] = {
     // Non-root consumption (e.g. a write above the limit): the merged result

@@ -45,8 +45,10 @@ import graft.sql.{GraftSession, Render}
   * Nullable(T) as a null-flag byte column ahead of the values — and the
   * [[graft.sql.Render]] string form for everything else (decimals,
   * arrays, maps), so a native client reads typed data where types exist
-  * and faithful text where they don't. Rows stream in bounded blocks via
-  * `toLocalIterator` — the server never materializes a result. */
+  * and faithful text where they don't. Rows the driver already holds
+  * (SHOW, DESCRIBE, `system.*`) are sent from the driver with no Spark job;
+  * every other result streams in bounded blocks via `toLocalIterator`, so
+  * the server never materializes a distributed result. */
 class ClickHouseServer(spark: SparkSession, port: Int = 0,
     blockRows: Int = 8192) {
 
@@ -424,7 +426,7 @@ class ClickHouseServer(spark: SparkSession, port: Int = 0,
       if (df.schema.nonEmpty) {
         val fields = df.schema.fields
         val encs = fields.map(f => encoderFor(f.dataType))
-        val rows = df.toLocalIterator()
+        val rows = resultRows(df)
         // header block (zero rows) announces the schema, as CH servers do
         writeBlock(out, fields, encs, Seq.empty, compress, method)
         val buf = scala.collection.mutable.ArrayBuffer[Row]()

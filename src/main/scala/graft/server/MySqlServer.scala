@@ -40,8 +40,10 @@ import graft.sql.{GraftSession, Render}
   *     string rendered by [[graft.sql.Render]] (the same rendering the
   *     reference's query_result_writer.rs emits), NULL = 0xfb, column
   *     type VAR_STRING — stock clients render from the text form;
-  *   - rows stream through `toLocalIterator` — the server never
-  *     materializes a full result; a failure mid-stream emits a correctly
+  *   - rows the driver already holds (SHOW, DESCRIBE, `system.*`) are
+  *     sent from the driver with no Spark job; every other result streams
+  *     through `toLocalIterator`, so the server never materializes a
+  *     distributed result; a failure mid-stream emits a correctly
   *     sequenced ERR packet (the protocol's mid-resultset error shape).
   *
   * Threading: one daemon accept loop, one daemon thread per connection —
@@ -420,17 +422,7 @@ class MySqlServer(spark: SparkSession, port: Int = 0) {
         writePacket(out, 1, okPacket())
         out.flush()
       } else {
-        val names = df.schema.fieldNames.toSeq
-        val rows = df.toLocalIterator()
-        val it = new Iterator[Seq[String]] {
-          def hasNext: Boolean = rows.hasNext
-          def next(): Seq[String] = {
-            val r = rows.next()
-            (0 until r.length).map(i =>
-              if (r.isNullAt(i)) null else Render.value(r.get(i)))
-          }
-        }
-        writeResultSet(out, names, it, binary = true)
+        writeResultSet(out, df.schema.fieldNames.toSeq, renderedRows(df), binary = true)
       }
     } catch {
       case e: Throwable =>
@@ -439,6 +431,11 @@ class MySqlServer(spark: SparkSession, port: Int = 0) {
         out.flush()
     }
   }
+
+  /** Result cells in the text form [[graft.sql.Render]] gives, NULL as null. */
+  private def renderedRows(df: DataFrame): Iterator[Seq[String]] =
+    resultRows(df).map(r => (0 until r.length).map(i =>
+      if (r.isNullAt(i)) null else Render.value(r.get(i))))
 
   // stock clients open with `select @@version_comment limit 1` (and
   // connectors probe other @@ vars); answer them as one empty-string cell
@@ -457,17 +454,7 @@ class MySqlServer(spark: SparkSession, port: Int = 0) {
             writePacket(out, 1, okPacket())
             out.flush()
           } else {
-            val names = df.schema.fieldNames.toSeq
-            val rows = df.toLocalIterator()
-            val it = new Iterator[Seq[String]] {
-              def hasNext: Boolean = rows.hasNext
-              def next(): Seq[String] = {
-                val r = rows.next()
-                (0 until r.length).map(i =>
-                  if (r.isNullAt(i)) null else Render.value(r.get(i)))
-              }
-            }
-            writeResultSet(out, names, it)
+            writeResultSet(out, df.schema.fieldNames.toSeq, renderedRows(df))
           }
       }
     } catch {

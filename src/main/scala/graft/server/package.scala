@@ -2,6 +2,11 @@ package graft
 
 import java.io.{EOFException, InputStream}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LocalTableScanExec
+
 package object server {
 
   /** Reads exactly `n` bytes. A stream that ends first throws
@@ -17,4 +22,17 @@ package object server {
     }
     buf
   }
+
+  /** The rows a front door sends for `df`. Rows the driver already holds
+    * (the plan is a `LocalTableScanExec`: SHOW, DESCRIBE, `system.*`,
+    * VALUES) come from `collect()`, which starts no Spark job; Spark's
+    * `toLocalIterator` would re-parallelise them and fetch each slice with
+    * a job of its own. Every other result streams through
+    * `toLocalIterator`, one partition at a time, so the server never holds
+    * a whole distributed result. */
+  private[server] def resultRows(df: DataFrame): Iterator[Row] =
+    df.queryExecution.executedPlan match {
+      case _: LocalTableScanExec => df.collect().iterator
+      case _ => df.toLocalIterator().asScala
+    }
 }

@@ -171,7 +171,7 @@ class GraftSession(val spark: SparkSession) {
         case CreateHeadRe(h, tbl, cols) =>
           recordNullability(tbl, cols)
           recordEngine(tbl, engineLabel(engine))
-          s"$h (${notNullColumns(cols)})"
+          s"$h (${notNullColumns(mapRefTypes(cols))})"
         case _ => head
       }
       Some(s"$headNN USING $using$optClause")

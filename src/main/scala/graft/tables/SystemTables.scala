@@ -3,6 +3,7 @@ package graft.tables
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -12,9 +13,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * `system.functions`, `system.contributors`, `system.clusters`,
   * `system.processes` — small metadata relations over engine state.
   *
-  * Spark-native restatement: tiny literal DataFrames over `spark.catalog` and
-  * the session conf, registered as temp views. Temp-view names cannot carry a
-  * dot, so the SQL dialect layer rewrites `system.x` → `system_x`
+  * Spark-native restatement: tiny literal DataFrames over the session
+  * catalog and the session conf, registered as temp views. Temp-view names
+  * cannot carry a dot, so the SQL dialect layer rewrites `system.x` → `system_x`
   * (graft.sql.Dialect). These relations are driver-side by design — metadata,
   * never data-scale.
   */
@@ -29,7 +30,7 @@ object SystemTables {
 
   def databases(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    spark.catalog.listDatabases().collect().map(_.name).toSeq.toDF("name")
+    spark.sessionState.catalog.listDatabases().toDF("name")
   }
 
   /** Catalog tables across ALL databases plus the virtual system tables
@@ -41,11 +42,15 @@ object SystemTables {
     // "remote", …) — tables_table.rs renders Table::engine(); Spark's
     // tableType stands in for tables created outside the dialect
     val labels = graft.sql.GraftSession.tableEngines(spark)
-    val catalog = spark.catalog.listDatabases().collect().map(_.name).toSeq
-      .flatMap(db => spark.catalog.listTables(db).collect()
-        .filter(!_.isTemporary)
-        .map(t => (db, t.name,
-          labels.getOrElse(s"$db.${t.name}".toLowerCase, t.tableType))))
+    // the session catalog, not the Catalog API, which runs each listing as
+    // a Spark job; getTablesByName skips a table dropped since the listing
+    val sc = spark.sessionState.catalog
+    val catalog = sc.listDatabases().flatMap(db =>
+      sc.getTablesByName(sc.listTables(db, "*", includeLocalTempViews = false))
+        .map { t =>
+          val name = t.identifier.table
+          (db, name, labels.getOrElse(s"$db.$name".toLowerCase, t.tableType.name))
+        })
     val virtual = all.map(n => ("system", n, s"System${n.capitalize}"))
     (catalog ++ virtual).toDF("database", "name", "engine")
   }
@@ -58,9 +63,14 @@ object SystemTables {
       .toSeq.sorted.toDF("name", "value")
   }
 
+  /** The names `spark.catalog.listFunctions()` gives, without its two
+    * Spark jobs: the session catalog's functions of the current database
+    * plus the operators (`!=`, `<>`, `case`, `||`) the Catalog API adds. */
   def functions(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    spark.catalog.listFunctions().collect().map(_.name).sorted.toSeq.toDF("name")
+    val sc = spark.sessionState.catalog
+    (sc.listFunctions(sc.getCurrentDatabase, "*").map(_._1.funcName) ++
+      FunctionRegistry.builtinOperators.keys).sorted.toDF("name")
   }
 
   /** Static metadata tables (contributors_table.rs, clusters_table.rs,
@@ -178,13 +188,14 @@ object SystemTables {
     "functions", "contributors", "clusters", "processes", "tracing")
 
   /** (Re-)register ONE system table as its `system_<name>` temp view —
-    * the on-use form: these views are CATALOG SNAPSHOTS (listDatabases ×
-    * listTables for `tables`, listFunctions for `functions` — hundreds of
-    * metastore round trips), so building all nine eagerly per session, or
-    * refreshing all nine because a query touched one, is measurable
-    * front-door latency paid for nothing. The SQL layer registers exactly
-    * the views a statement references, at reference semantics (live
-    * metadata on every scan — system_database.rs). */
+    * the on-use form: these views are CATALOG SNAPSHOTS (session-catalog
+    * listings for `databases`, `tables` and `functions`), so building all
+    * nine per statement would pay for eight listings the statement never
+    * reads. The SQL layer registers exactly the views a statement
+    * references, at reference semantics (live metadata on every scan —
+    * system_database.rs). Every view is a driver-held `LocalRelation`: a
+    * read of it, sorted or not, starts no Spark job
+    * ([[graft.plans.SortLocalRelation]]). */
   def register(spark: SparkSession, name: String): Unit = (name match {
     case "one" => one(spark)
     case "databases" => databases(spark)
@@ -197,7 +208,4 @@ object SystemTables {
     case "tracing" => tracing(spark)
     case other => throw new IllegalArgumentException(s"no system table $other")
   }).createOrReplaceTempView(s"system_$name")
-
-  /** Register every system table as `system_<name>` temp view. */
-  def registerAll(spark: SparkSession): Unit = all.foreach(register(spark, _))
 }

@@ -135,6 +135,17 @@ class DialectSpec extends AnyFunSuite {
     g.sql("DROP TABLE t_mem")
   }
 
+  test("ENGINE=Memory accepts the reference's bare VARCHAR and DateTime types") {
+    g.sql("DROP TABLE IF EXISTS t_memty")
+    g.sql("CREATE TABLE t_memty (s VARCHAR, t DateTime) ENGINE = Memory")
+    g.sql("INSERT INTO t_memty VALUES ('x', TIMESTAMP '2021-01-02 03:04:05')")
+    val r = g.sql("SELECT s, CAST(t AS STRING) FROM t_memty").head()
+    assert(r.getString(0) == "x" && r.getString(1) == "2021-01-02 03:04:05")
+    val types = g.sql("DESCRIBE t_memty").collect().map(r => r.getString(0) -> r.getString(1))
+    assert(types.toSeq == Seq("s" -> "Utf8", "t" -> "Timestamp"))
+    g.sql("DROP TABLE t_memty")
+  }
+
   test("CREATE TABLE ENGINE=CSV with location reads the file (suite 05)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-csv")
     val f = dir.resolve("data.csv")

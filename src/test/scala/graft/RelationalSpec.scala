@@ -11,9 +11,12 @@ class RelationalSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private lazy val df = Seq(
+  // read from an RDD, not a local Seq: an ORDER BY over a local relation is
+  // answered on the driver (graft.plans.SortLocalRelation), and these
+  // operators are meant for distributed input
+  private lazy val df = spark.sparkContext.parallelize(Seq(
     ("a", 1), ("a", 2), ("a", 3), ("b", 1), ("b", 2), ("c", 9)
-  ).toDF("k", "v")
+  ), 2).toDF("k", "v")
 
   test("limitBy keeps first n per key in the given order") {
     val out = Relational.limitBy(df, 2, Seq(col("k")), Seq(col("v")))

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{DataFrame, Encoder}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +17,12 @@ class TopKSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def physical(df: DataFrame): String = df.queryExecution.executedPlan.toString
+
+  /** `xs` as a one-column frame read from an RDD, not a local Seq: an ORDER
+    * BY over a local relation is answered on the driver
+    * (graft.plans.SortLocalRelation) and never reaches the top-k planner. */
+  private def distributed[T: ClassTag: Encoder](xs: Seq[T], name: String): DataFrame =
+    spark.createDataset(spark.sparkContext.parallelize(xs, 2)).toDF(name)
 
   test("numbers desc limit plans PrimitiveTopK, not TakeOrderedAndProject") {
     val df = Tables.numbers(spark, 100000L, Some(4)).orderBy(col("number").desc).limit(100)
@@ -38,20 +46,17 @@ class TopKSpec extends AnyFunSuite {
   test("double keys: IEEE order incl. negatives and infinities") {
     val vals = Seq(3.5, -2.25, 0.0, -0.0, 1e300, -1e300,
       Double.PositiveInfinity, Double.NegativeInfinity, 42.0, -42.0)
-    val df = vals.toDF("d")
-    // non-nullable attribute: go through a typed Dataset of primitives
-    val ds = spark.createDataset(vals)(org.apache.spark.sql.Encoders.scalaDouble)
-      .toDF("d")
+    // non-nullable attribute: a typed Dataset of primitives
+    val ds = distributed(vals, "d")
     val got = ds.orderBy(col("d").desc).limit(4).as[Double].collect().toSeq
     assert(got == vals.sorted(Ordering[Double].reverse).take(4))
     val gotAsc = ds.orderBy(col("d").asc).limit(4).as[Double].collect().toSeq
     assert(gotAsc == vals.sorted.take(4))
     assert(physical(ds.orderBy(col("d").desc).limit(4)).contains("PrimitiveTopK"))
-    df.count() // silence unused
   }
 
   test("int keys via a range cast") {
-    val ds = spark.createDataset(Seq(5, 1, 9, -3, 7))(org.apache.spark.sql.Encoders.scalaInt).toDF("i")
+    val ds = distributed(Seq(5, 1, 9, -3, 7), "i")
     val got = ds.orderBy(col("i").desc).limit(3).as[Int].collect().toSeq
     assert(got == Seq(9, 7, 5))
     assert(physical(ds.orderBy(col("i").desc).limit(3)).contains("PrimitiveTopK"))
@@ -67,7 +72,7 @@ class TopKSpec extends AnyFunSuite {
   }
 
   test("nullable key does NOT take the primitive path") {
-    val df = Seq(Some(1L), None, Some(5L)).toDF("v")
+    val df = distributed(Seq(Some(1L), None, Some(5L)), "v")
       .orderBy(col("v").desc).limit(2)
     assert(!physical(df).contains("PrimitiveTopK"), physical(df))
     // and the stock path answers correctly (Spark DESC default: NULLS LAST)
@@ -76,7 +81,7 @@ class TopKSpec extends AnyFunSuite {
   }
 
   test("string key does NOT take the primitive path") {
-    val ds = spark.createDataset(Seq("b", "a", "c"))(org.apache.spark.sql.Encoders.STRING).toDF("s")
+    val ds = distributed(Seq("b", "a", "c"), "s")
     val df = ds.orderBy(col("s")).limit(2)
     assert(!physical(df).contains("PrimitiveTopK"), physical(df))
   }
