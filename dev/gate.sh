@@ -15,6 +15,15 @@ sbt -batch test 2>&1 | grep -E "Tests:|All tests passed|FAILED" | tail -3
 echo "== perfbench harness: compile + test =="
 (cd perfbench/harness && sbt -batch perfbench/test 2>&1 | grep -E "Tests:|All tests passed|FAILED" | tail -3)
 
+# Collected row order: the oracle below compares files written through
+# `.coalesce(1).write`, so no other stage checks the rows a root ORDER BY
+# returns to the driver. olap_mix compares them, in order, against DuckDB;
+# wire_short replays the MySQL rows in-process. A wrong row exits 1.
+for w in olap_mix wire_short; do
+  echo "== perfbench $w (3 s, row checks) =="
+  python3 perfbench/run.py --workload "$w" --seed 1 --seconds 3 --trace 0 | tail -1
+done
+
 echo "== Verify + DuckDB oracle (sf0.01) =="
 rm -rf /tmp/vout
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/vout" 2>&1 | grep "\[verify\]" || true

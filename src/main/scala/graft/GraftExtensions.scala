@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.IntegerType
 import graft.ext.{TextAnalysis => TA, Vectors}
 import graft.functions.{DotProduct, HashExpressions => H, TextExpressions,
   UniqExactAggregator, VecSumAggregator}
-import graft.plans.{CountFromStats, RangeAggStrategy, SortLocalRelation, TopKStrategy}
+import graft.plans.{CountFromStats, RangeAggStrategy, RootSortStrategy, SortLocalRelation,
+  TopKStrategy}
 
 /** The one place the engine changes a SparkSession: its optimizer rules,
   * planner strategies and SQL functions — the reference keeps the same
@@ -31,6 +32,7 @@ object GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => SortLocalRelation)
     ext.injectPlannerStrategy(_ => TopKStrategy)
     ext.injectPlannerStrategy(_ => RangeAggStrategy)
+    ext.injectPlannerStrategy(_ => RootSortStrategy)
     sqlFunctions.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(
         getClass.getName, null, name, null, "", "", "", "", "", "", "built-in"), builder))

@@ -47,8 +47,10 @@ import graft.sql.{GraftSession, Render}
   * arrays, maps), so a native client reads typed data where types exist
   * and faithful text where they don't. Rows the driver already holds
   * (SHOW, DESCRIBE, `system.*`) are sent from the driver with no Spark job;
-  * every other result streams in bounded blocks via `toLocalIterator`, so
-  * the server never materializes a distributed result. */
+  * a root ORDER BY result is merged on the driver
+  * ([[graft.plans.DriverMergeExec]]) and handed over whole; every other
+  * result streams in bounded blocks via `toLocalIterator`, one partition
+  * at a time. */
 class ClickHouseServer(spark: SparkSession, port: Int = 0,
     blockRows: Int = 8192) {
 

@@ -41,9 +41,10 @@ import graft.sql.{GraftSession, Render}
   *     reference's query_result_writer.rs emits), NULL = 0xfb, column
   *     type VAR_STRING — stock clients render from the text form;
   *   - rows the driver already holds (SHOW, DESCRIBE, `system.*`) are
-  *     sent from the driver with no Spark job; every other result streams
-  *     through `toLocalIterator`, so the server never materializes a
-  *     distributed result; a failure mid-stream emits a correctly
+  *     sent from the driver with no Spark job; a root ORDER BY result is
+  *     merged on the driver ([[graft.plans.DriverMergeExec]]) and handed
+  *     over whole; every other result streams through `toLocalIterator`,
+  *     one partition at a time; a failure mid-stream emits a correctly
   *     sequenced ERR packet (the protocol's mid-resultset error shape).
   *
   * Threading: one daemon accept loop, one daemon thread per connection —

@@ -27,9 +27,11 @@ package object server {
     * (the plan is a `LocalTableScanExec`: SHOW, DESCRIBE, `system.*`,
     * VALUES) come from `collect()`, which starts no Spark job; Spark's
     * `toLocalIterator` would re-parallelise them and fetch each slice with
-    * a job of its own. Every other result streams through
-    * `toLocalIterator`, one partition at a time, so the server never holds
-    * a whole distributed result. */
+    * a job of its own. Every other result goes through `toLocalIterator`.
+    * For a root ORDER BY that reaches [[graft.plans.DriverMergeExec]],
+    * which collects the sorted partitions in one job and hands over the
+    * merged rows; any other result streams one partition at a time, so
+    * the server never holds it whole. */
   private[server] def resultRows(df: DataFrame): Iterator[Row] =
     df.queryExecution.executedPlan match {
       case _: LocalTableScanExec => df.collect().iterator

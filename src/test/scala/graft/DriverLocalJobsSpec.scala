@@ -15,8 +15,10 @@ import graft.tables.SystemTables
 /** Statements whose answer the driver already holds — SHOW, DESCRIBE,
   * `system.*` and closed-form `numbers(N)` aggregates — start no Spark job,
   * in-process and over both wire front doors, and send the same rows either
-  * way. A result the driver does not hold still streams one partition per
-  * job.
+  * way. A root ORDER BY is merged on the driver
+  * ([[graft.plans.DriverMergeExec]]), so it starts the jobs of the same
+  * statement without ORDER BY, and the same number over the wire. A result
+  * the driver does not hold still streams one partition per job.
   *
   * Jobs are counted by a SparkListener, after the listener bus drains, and
   * only for jobs carrying this spec's local property: it is set on the test
@@ -50,6 +52,13 @@ class DriverLocalJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     "SELECT database, name FROM system.tables ORDER BY database, name",
     "SELECT sum(number) AS s, count(*) AS c FROM numbers(54321)")
 
+  /** Root ORDER BYs over a four-file parquet table, each with the ORDER BY
+    * clause that is cut off to get the same statement without it. */
+  private val rootSorts = Seq(
+    "SELECT k, count(*) AS c, sum(id) AS s FROM default.dlj_fact GROUP BY k" ->
+      " ORDER BY k",
+    "SELECT id, k, v FROM default.dlj_fact WHERE id % 3 = 0" -> " ORDER BY v, id")
+
   override def beforeAll(): Unit = {
     sc.addSparkListener(listener)
     sc.setLocalProperty(Mark, "on")
@@ -60,6 +69,9 @@ class DriverLocalJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     g.sql("CREATE TABLE default.dlj_mem (a BIGINT, s VARCHAR) ENGINE = Memory")
     g.sql("CREATE OR REPLACE VIEW default.dlj_v AS SELECT 1 AS one")
     spark.range(3).createOrReplaceTempView("dlj_tmp")
+    g.sql("DROP TABLE IF EXISTS default.dlj_fact")
+    spark.range(0, 4000, 1, 4).selectExpr("id", "id % 9 AS k", "concat('v', id % 101) AS v")
+      .write.saveAsTable("default.dlj_fact")
     mysql = new MySqlServer(spark)
     mysqlPort = mysql.start()
     ch = new ClickHouseServer(spark)
@@ -73,6 +85,7 @@ class DriverLocalJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val g = GraftSession(spark)
       g.sql("DROP VIEW IF EXISTS default.dlj_v")
       g.sql("DROP TABLE IF EXISTS default.dlj_mem")
+      g.sql("DROP TABLE IF EXISTS default.dlj_fact")
       g.sql("DROP DATABASE IF EXISTS dlj_db2")
       spark.catalog.dropTempView("dlj_tmp")
     } finally {
@@ -144,6 +157,41 @@ class DriverLocalJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
         val (expected, _) = inProcess(s)
         val (res, n) = counted(c.query(s))
         assert(n == 0, s"$s started $n jobs")
+        assert(res.map(_._3) == Right(expected), s)
+      }
+    }
+  }
+
+  test("a root ORDER BY starts as many jobs in-process as the statement without it") {
+    rootSorts.foreach { case (select, orderBy) =>
+      val (rows, sorted) = inProcess(select + orderBy)
+      val (unsortedRows, unsorted) = inProcess(select)
+      assert(rows.sortBy(_.mkString(",")) == unsortedRows.sortBy(_.mkString(",")))
+      assert(sorted > 0 && sorted == unsorted,
+        s"$select$orderBy started $sorted jobs, without ORDER BY $unsorted")
+    }
+  }
+
+  test("a root ORDER BY starts the in-process jobs over MySQL and ClickHouse " +
+      "and sends the in-process rows in order") {
+    rootSorts.foreach { case (select, orderBy) =>
+      val s = select + orderBy
+      val (expected, n) = inProcess(s)
+      assert(n == inProcess(select)._2, s)
+      withMySql { c =>
+        val (text, nText) = counted(c.query(s))
+        assert(nText == n, s"$s (COM_QUERY) started $nText jobs, in-process $n")
+        assert(text.map(_._2) == Right(expected), s)
+        val (prepared, nPrep) = counted {
+          val Right((id, _)) = c.prepare(s): @unchecked
+          try c.execute(id, Nil) finally c.stmtClose(id)
+        }
+        assert(nPrep == n, s"$s (COM_STMT_EXECUTE) started $nPrep jobs, in-process $n")
+        assert(prepared.map(_._2) == Right(expected), s)
+      }
+      withCh { c =>
+        val (res, nCh) = counted(c.query(s))
+        assert(nCh == n, s"$s started $nCh jobs over ClickHouse, in-process $n")
         assert(res.map(_._3) == Right(expected), s)
       }
     }
