@@ -18,8 +18,10 @@ echo "== perfbench harness: compile + test =="
 # Collected row order: the oracle below compares files written through
 # `.coalesce(1).write`, so no other stage checks the rows a root ORDER BY
 # returns to the driver. olap_mix compares them, in order, against DuckDB;
-# wire_short replays the MySQL rows in-process. A wrong row exits 1.
-for w in olap_mix wire_short; do
+# wire_short replays the MySQL rows in-process. ingest_rw is the one
+# workload that issues dialect DDL (DROP TABLE IF EXISTS, CREATE ... ENGINE
+# = Memory) and checks the rows it reads back. A wrong row exits 1.
+for w in olap_mix wire_short ingest_rw; do
   echo "== perfbench $w (3 s, row checks) =="
   python3 perfbench/run.py --workload "$w" --seed 1 --seconds 3 --trace 0 | tail -1
 done

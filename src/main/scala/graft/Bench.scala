@@ -38,19 +38,7 @@ object Bench {
     // task-level memory/disk spill totals across the whole suite — zero at
     // a comfortable heap; nonzero-but-bounded is exactly what "degrades
     // instead of OOMing" looks like at a deliberately small -Xmx.
-    val memSpilled = new java.util.concurrent.atomic.AtomicLong
-    val diskSpilled = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            memSpilled.addAndGet(m.memoryBytesSpilled)
-            diskSpilled.addAndGet(m.diskBytesSpilled): Unit
-          }
-        }
-      })
+    val spilledBytes = SparkBoot.spillCounter(spark)
 
     // JVM/session warm-up so the first timed query doesn't pay executor
     // spin-up, parquet-reader init, or first-codegen compilation: one range
@@ -325,7 +313,7 @@ object Bench {
     // heap_gb = the ACTUAL -Xmx this run had (the constrained-memory
     // protocol's receipt); spill counters say whether it ever pressured
     val heapGb = sec3(Runtime.getRuntime.maxMemory / 1073741824.0)
-    val spillMb = (memSpilled.get + diskSpilled.get) >> 20
+    val spillMb = spilledBytes() >> 20
     def jmap(xs: Seq[(String, Double)], f: Double => String): String =
       xs.map { case (k, v) => "\"" + k + "\":" + (if (v < 0) "-1.0" else f(v)) }
         .mkString("{", ",", "}")

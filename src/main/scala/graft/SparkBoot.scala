@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** The one session builder: the driver-contract mains (Verify, Bench), the
@@ -40,6 +41,19 @@ object SparkBoot {
   private def ownClasspath: String = {
     val self = getClass.getProtectionDomain.getCodeSource.getLocation.toURI
     new java.io.File(self).getAbsolutePath
+  }
+
+  /** Running total of the bytes tasks spilled (memory + disk) on this
+    * session's SparkContext since the call — the spill receipt of the
+    * constrained-heap protocol (PERFNOTES). */
+  def spillCounter(spark: SparkSession): () => Long = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          bytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled))
+    })
+    () => bytes.get
   }
 
   def builder(appName: String): SparkSession.Builder = {

@@ -52,19 +52,7 @@ object ScaleReceipt {
       else Set("cc", "ccstar", "neardup", "pctl")
     val spark = graft.SparkBoot.builder("graft-scale-receipt").getOrCreate()
 
-    val memSpilled = new java.util.concurrent.atomic.AtomicLong
-    val diskSpilled = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            memSpilled.addAndGet(m.memoryBytesSpilled)
-            diskSpilled.addAndGet(m.diskBytesSpilled): Unit
-          }
-        }
-      })
+    val spilledBytes = graft.SparkBoot.spillCounter(spark)
 
     def t(name: String) = graft.tables.Tables.table(spark, sfDir, name)
 
@@ -81,7 +69,7 @@ object ScaleReceipt {
 
     var anyFailed = false
     def receipt(name: String)(mk: () => DataFrame): Unit = {
-      val spill0 = memSpilled.get + diskSpilled.get
+      val spill0 = spilledBytes()
       def once(): (Double, Long, Long) = {
         val t0 = System.nanoTime()
         val (h, n) = hashCount(mk())
@@ -90,7 +78,7 @@ object ScaleReceipt {
       try {
         val (s1, h1, n1) = once()
         val (s2, h2, n2) = once()
-        val spillMb = (memSpilled.get + diskSpilled.get - spill0) >> 20
+        val spillMb = (spilledBytes() - spill0) >> 20
         val consistent = h1 == h2 && n1 == n2
         println(f"[scale-receipt] $name%-8s run1=$s1%8.1fs run2=$s2%8.1fs " +
           f"rows=$n1%10d hash=$h1%016x consistent=$consistent spillMb=$spillMb")

@@ -292,20 +292,7 @@ case class PrimitiveTopKPartialExec(limit: Int, order: SortOrder, child: SparkPl
   override def doConsume(ctx: CodegenContext, input: Seq[ExprCode], row: ExprCode): String = {
     val keyEv = input(keyOrdinal)
     val mk = ctx.freshName("topkMapped")
-    val mapCode = keyAttr.dataType match {
-      case LongType | TimestampType | TimestampNTZType =>
-        s"long $mk = ${keyEv.value};"
-      case IntegerType | DateType | ShortType | ByteType =>
-        s"long $mk = (long) ${keyEv.value};"
-      case DoubleType =>
-        s"""long $mk = Double.doubleToLongBits(${keyEv.value});
-           |$mk = $mk ^ (($mk >> 63) & 0x7fffffffffffffffL);""".stripMargin
-      case FloatType =>
-        s"""long $mk = Double.doubleToLongBits((double) ${keyEv.value});
-           |$mk = $mk ^ (($mk >> 63) & 0x7fffffffffffffffL);""".stripMargin
-      case other => throw new IllegalStateException(s"unsupported top-k key type $other")
-    }
-    val flip = if (desc) "" else s"$mk = ~$mk;"
+    val mapped = mapCode(mk, keyEv.value.toString)
     if (keyOnly) {
       // Hot path: read key, map, one compare against the admission threshold.
       // `>=` (not `>`): the first k keys and exact ties at the boundary must
@@ -313,8 +300,7 @@ case class PrimitiveTopKPartialExec(limit: Int, order: SortOrder, child: SparkPl
       // a legal mapped key, hence inclusive.
       s"""
          |${evaluateVariables(input)}
-         |$mapCode
-         |$flip
+         |$mapped
          |if ($mk >= $thrTerm) {
          |  $bufTerm[$nTerm++] = $mk;
          |  if ($nTerm == $bufLen) $compactFn();
@@ -337,8 +323,7 @@ case class PrimitiveTopKPartialExec(limit: Int, order: SortOrder, child: SparkPl
         // just the key, compare, insert the row as-is
         s"""
            |${evaluateVariables(Seq(keyEv))}
-           |$mapCode
-           |$flip
+           |$mapped
            |if ($sizeTerm < $limit || $mk > $keysTerm[0]) {
            |  $insertFn($mk, ($rowCls) ${row.value});
            |}
@@ -348,8 +333,7 @@ case class PrimitiveTopKPartialExec(limit: Int, order: SortOrder, child: SparkPl
         // the row is BUILT (row.code) only inside the beats branch — per
         // row: read key, map, one compare against the heap root
         s"""
-           |$mapCode
-           |$flip
+           |$mapped
            |if ($sizeTerm < $limit || $mk > $keysTerm[0]) {
            |  ${row.code}
            |  $insertFn($mk, ($rowCls) ${row.value});
@@ -363,8 +347,7 @@ case class PrimitiveTopKPartialExec(limit: Int, order: SortOrder, child: SparkPl
         // the key computation costs anyway
         s"""
            |${row.code}
-           |$mapCode
-           |$flip
+           |$mapped
            |if ($sizeTerm < $limit || $mk > $keysTerm[0]) {
            |  $insertFn($mk, ($rowCls) ${row.value});
            |}

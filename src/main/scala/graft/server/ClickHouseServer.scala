@@ -1,7 +1,7 @@
 package graft.server
 
 import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, InputStream, OutputStream}
-import java.net.{ServerSocket, Socket}
+import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -54,39 +54,12 @@ import graft.sql.{GraftSession, Render}
 class ClickHouseServer(spark: SparkSession, port: Int = 0,
     blockRows: Int = 8192) {
 
-  @volatile private var serverSocket: ServerSocket = _
-  @volatile private var running = false
-  private val connSeq = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val acceptor = new Acceptor("ClickHouseServer", "clickhouse", port, handleConnection)
 
-  def start(): Int = synchronized {
-    require(serverSocket == null, "ClickHouseServer already started")
-    serverSocket = new ServerSocket(port)
-    running = true
-    val acceptor = new Thread(() => {
-      while (running) {
-        try {
-          val sock = serverSocket.accept()
-          val t = new Thread(() => handleConnection(sock))
-          t.setDaemon(true)
-          t.setName(s"graft-clickhouse-conn-${connSeq.incrementAndGet()}")
-          t.start()
-        } catch {
-          case _: Throwable if !running =>
-          case e: Throwable =>
-            System.err.println(s"[clickhouse] accept failed: ${e.getMessage}")
-        }
-      }
-    })
-    acceptor.setDaemon(true)
-    acceptor.setName("graft-clickhouse-acceptor")
-    acceptor.start()
-    serverSocket.getLocalPort
-  }
+  /** Bind + start accepting; returns the bound port (ephemeral when 0). */
+  def start(): Int = acceptor.start()
 
-  def stop(): Unit = synchronized {
-    running = false
-    if (serverSocket != null) { serverSocket.close(); serverSocket = null }
-  }
+  def stop(): Unit = acceptor.stop()
 
   // ---- primitive codecs ----------------------------------------------------
 

@@ -17,8 +17,10 @@ import graft.tables.SystemTables
   *   - `GET /v1/hello`   → engine identity + config summary (the
   *     reference's hello returns its Config debug dump;
   *     api/http/v1/hello.rs:12)
-  *   - `GET /v1/configs` → the full settings map as JSON — the same
-  *     overlay `system.settings` serves (api/http/v1/config.rs:12)
+  *   - `GET /v1/configs` → the settings map as JSON, from the same
+  *     [[graft.sql.GraftSession.settings]] `system.settings` serves: the
+  *     dialect settings' defaults overlaid by this server's session conf
+  *     (api/http/v1/config.rs:12)
   *   - `GET /v1/cluster/list`, `POST /v1/cluster/add`,
   *     `POST /v1/cluster/remove` → in-memory cluster-node registry,
   *     seeded with the local node; add/remove take the reference's
@@ -40,6 +42,7 @@ import graft.tables.SystemTables
 class HttpApiServer(spark: SparkSession, port: Int = 0) {
 
   @volatile private var server: HttpServer = _
+  private var pool: java.util.concurrent.ExecutorService = _
 
   // ---- cluster registry ------------------------------------------------
 
@@ -363,22 +366,16 @@ class HttpApiServer(spark: SparkSession, port: Int = 0) {
   private def json(ex: HttpExchange, code: Int, body: String): Unit =
     respond(ex, code, "application/json; charset=utf-8", body)
 
-  private def hello: String = {
-    val s = GraftSession.cached(spark)
+  private def hello: String =
     s"""{"name":"graft","version":${jStr(spark.version)},""" +
       s""""master":${jStr(spark.sparkContext.master)},""" +
-      s""""settings_overridden":${s.settings.size},""" +
+      s""""settings_overridden":${GraftSession.settings(spark).count(!_._1.contains('.'))},""" +
       s""""endpoints":["/v1/hello","/v1/configs","/v1/cluster/list",""" +
       s""""/v1/remote/tables","/metrics"]}"""
-  }
 
-  private def configs: String = {
-    GraftSession.cached(spark) // materialize the settings registry
-    val all = (spark.conf.getAll ++
-      GraftSession.settingsRegistry(spark).toMap).toSeq.sorted
-    all.map { case (k, v) => s"${jStr(k)}:${jStr(v)}" }
+  private def configs: String =
+    GraftSession.settings(spark).map { case (k, v) => s"${jStr(k)}:${jStr(v)}" }
       .mkString("{", ",", "}")
-  }
 
   private def clusterList: String = nodes.synchronized {
     nodes.map { case (n, (p, a)) =>
@@ -457,8 +454,9 @@ class HttpApiServer(spark: SparkSession, port: Int = 0) {
       handle(ex) { handleRemote(ex) })
     server.createContext("/metrics", (ex: HttpExchange) =>
       handle(ex) { respond(ex, 200, "text/plain; version=0.0.4", metrics) })
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4,
-      r => { val t = new Thread(r, "graft-http"); t.setDaemon(true); t }))
+    pool = java.util.concurrent.Executors.newFixedThreadPool(4,
+      r => { val t = new Thread(r, "graft-http"); t.setDaemon(true); t })
+    server.setExecutor(pool)
     server.start()
     server.getAddress.getPort
   }
@@ -471,7 +469,9 @@ class HttpApiServer(spark: SparkSession, port: Int = 0) {
         catch { case _: Throwable => () }
     } finally ex.close()
 
+  /** Stops serving and ends the handler threads (HttpServer.stop leaves
+    * its executor running). */
   def stop(): Unit = synchronized {
-    if (server != null) { server.stop(0); server = null }
+    if (server != null) { server.stop(0); server = null; pool.shutdown() }
   }
 }

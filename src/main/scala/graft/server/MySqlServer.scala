@@ -1,7 +1,7 @@
 package graft.server
 
 import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, InputStream, OutputStream}
-import java.net.{ServerSocket, Socket}
+import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -54,40 +54,12 @@ import graft.sql.{GraftSession, Render}
   * scopes settings per session — sessions/settings.rs:21-33). */
 class MySqlServer(spark: SparkSession, port: Int = 0) {
 
-  @volatile private var serverSocket: ServerSocket = _
-  @volatile private var running = false
-  private val connSeq = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val acceptor = new Acceptor("MySqlServer", "mysql", port, handleConnection)
 
   /** Bind + start accepting; returns the bound port (ephemeral when 0). */
-  def start(): Int = synchronized {
-    require(serverSocket == null, "MySqlServer already started")
-    serverSocket = new ServerSocket(port)
-    running = true
-    val acceptor = new Thread(() => {
-      while (running) {
-        try {
-          val sock = serverSocket.accept()
-          val t = new Thread(() => handleConnection(sock))
-          t.setDaemon(true)
-          t.setName(s"graft-mysql-conn-${connSeq.incrementAndGet()}")
-          t.start()
-        } catch {
-          case _: Throwable if !running => // closed during stop()
-          case e: Throwable =>
-            System.err.println(s"[mysql] accept failed: ${e.getMessage}")
-        }
-      }
-    })
-    acceptor.setDaemon(true)
-    acceptor.setName("graft-mysql-acceptor")
-    acceptor.start()
-    serverSocket.getLocalPort
-  }
+  def start(): Int = acceptor.start()
 
-  def stop(): Unit = synchronized {
-    running = false
-    if (serverSocket != null) { serverSocket.close(); serverSocket = null }
-  }
+  def stop(): Unit = acceptor.stop()
 
   // ---- packet framing ------------------------------------------------------
 

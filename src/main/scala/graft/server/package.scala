@@ -1,6 +1,8 @@
 package graft
 
 import java.io.{EOFException, InputStream}
+import java.net.{ServerSocket, Socket}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -8,6 +10,48 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LocalTableScanExec
 
 package object server {
+
+  /** The accept side both wire servers share: `start()` binds `port` and
+    * runs one daemon `graft-<tag>-acceptor` thread that hands every
+    * accepted socket to `handle` on a daemon `graft-<tag>-conn-<n>`
+    * thread, and returns the bound port (ephemeral when 0); `stop()`
+    * closes the socket, which ends the accept loop. */
+  private[server] final class Acceptor(server: String, tag: String, port: Int,
+      handle: Socket => Unit) {
+    @volatile private var serverSocket: ServerSocket = _
+    @volatile private var running = false
+    private val connSeq = new AtomicInteger(0)
+
+    def start(): Int = synchronized {
+      require(serverSocket == null, s"$server already started")
+      serverSocket = new ServerSocket(port)
+      running = true
+      val acceptor = new Thread(() => {
+        while (running) {
+          try {
+            val sock = serverSocket.accept()
+            val t = new Thread(() => handle(sock))
+            t.setDaemon(true)
+            t.setName(s"graft-$tag-conn-${connSeq.incrementAndGet()}")
+            t.start()
+          } catch {
+            case _: Throwable if !running => // closed during stop()
+            case e: Throwable =>
+              System.err.println(s"[$tag] accept failed: ${e.getMessage}")
+          }
+        }
+      })
+      acceptor.setDaemon(true)
+      acceptor.setName(s"graft-$tag-acceptor")
+      acceptor.start()
+      serverSocket.getLocalPort
+    }
+
+    def stop(): Unit = synchronized {
+      running = false
+      if (serverSocket != null) { serverSocket.close(); serverSocket = null }
+    }
+  }
 
   /** Reads exactly `n` bytes. A stream that ends first throws
     * [[java.io.EOFException]] — the wire servers catch exactly that type

@@ -1,8 +1,11 @@
 package graft.sql
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions.col
 
+import graft.tables.Hfs.rmTree
 import graft.tables.SystemTables
 
 /** The engine's SQL entry point — the Spark restatement of the reference's
@@ -14,6 +17,14 @@ import graft.tables.SystemTables
   *     and delegates everything else to Spark SQL — SELECT/INSERT/DDL/SET/
   *     EXPLAIN/DESCRIBE/USE are native;
   *   - system tables register as `system_*` views (SystemTables).
+  *
+  * The instance holds no state of its own; the dialect's state lives where
+  * Spark keeps the same kind of state. A table's reference engine and its
+  * declared NOT NULL columns are table properties in the shared catalog
+  * (the reference's `Table::engine()` and `DataField.nullable`), so every
+  * session sees them. `SET name = v` settings live in the session conf,
+  * one per session like the reference's settings object. The Remote
+  * engine's store node is one per SparkContext.
   *
   * Functions, rules and strategies are not wired here: every session built
   * by [[graft.SparkBoot.builder]] already carries them
@@ -45,16 +56,31 @@ class GraftSession(val spark: SparkSession) {
 
   private val CreateDbRe =
     """(?is)^(CREATE\s+DATABASE\s+(?:IF\s+NOT\s+EXISTS\s+)?[\w.]+)\s+ENGINE\s*=\s*\w+\s*$""".r
-  private val DropDbRe =
-    """(?is)^(DROP\s+DATABASE\s+(?:IF\s+EXISTS\s+)?[\w.]+)\s*$""".r
 
-  /** Reference columns default to NOT NULL (`DataField.nullable=false`
-    * unless declared — data_field.rs:11); Spark DDL defaults nullable. */
+  private val NotNullRe = """(?i)\bnot\s+null\b""".r
+  /** A trailing bare `NULL`: the reference's nullable declaration. */
+  private val NullableRe = """(?i)(?<!not|default)\s+null\s*$""".r
+
+  /** Column definitions in Spark's DDL. Reference columns default to NOT
+    * NULL (`DataField.nullable=false` unless declared — data_field.rs:11)
+    * where Spark's default is nullable, and Spark has no bare `NULL`. */
   private def notNullColumns(cols: String): String =
-    splitTopLevel(cols).map { c =>
-      if ("""(?i)\bnull\b""".r.findFirstIn(c).isDefined) c.trim
-      else c.trim + " NOT NULL"
+    splitTopLevel(mapRefTypes(cols)).map(_.trim).map { c =>
+      if ("""(?i)\bnull\b""".r.findFirstIn(c).isDefined) NullableRe.replaceFirstIn(c, "")
+      else c + " NOT NULL"
     }.mkString(", ")
+
+  /** The table facts a dialect CREATE records in the catalog: the
+    * reference engine label and the columns declared NOT NULL. Spark's
+    * file-source catalog relaxes nullability, so DESCRIBE reads the
+    * declaration back from here. */
+  private def tableFacts(label: String, cols: String): String = {
+    val notNull = splitTopLevel(notNullColumns(cols)).map(_.trim)
+      .filter(NotNullRe.findFirstIn(_).isDefined)
+      .map(_.split("\\s+").head.toLowerCase)
+    s" TBLPROPERTIES ('${GraftSession.EngineProperty}' = '$label', " +
+      s"'${GraftSession.NotNullProperty}' = '${notNull.mkString(",")}')"
+  }
 
   private def splitTopLevel(s: String): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer[String]()
@@ -72,25 +98,10 @@ class GraftSession(val spark: SparkSession) {
   private val CreateHeadRe =
     """(?is)^(CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+))\s*\((.*)\)$""".r
 
-  /** Declared NOT NULL columns per table. Spark's file-source catalog
-    * relaxes nullability on read, so DESCRIBE consults the DDL declaration
-    * (the reference's catalog keeps `DataField.nullable` as declared). */
-  private val declaredNotNull = scala.collection.mutable.Map[String, Set[String]]()
-
-  private def recordNullability(table: String, cols: String): Unit = {
-    val nn = splitTopLevel(cols).flatMap { c =>
-      val name = c.trim.split("\\s+").headOption.getOrElse("")
-      val explicitNullable = """(?i)\bnull\b""".r.findFirstIn(c).isDefined &&
-        """(?i)not\s+null""".r.findFirstIn(c).isEmpty
-      if (explicitNullable || name.isEmpty) None else Some(name.toLowerCase)
-    }.toSet
-    declaredNotNull(table.toLowerCase) = nn
-    declaredNotNull(table.split("\\.").last.toLowerCase) = nn
-  }
-
   /** Reference engine label per dialect-created engine keyword — what
     * `system.tables` renders (the reference's `Table::engine()` strings:
-    * csv_table.rs:65 "CSV", remote_table.rs "remote", …). */
+    * csv_table.rs:65 "CSV", remote_table.rs "remote", …). It is recorded
+    * as the table's `graft.engine` property. */
   private def engineLabel(engine: String): String = engine.toLowerCase match {
     case "csv" => "CSV"
     case "parquet" => "Parquet"
@@ -107,44 +118,36 @@ class GraftSession(val spark: SparkSession) {
     cols.replaceAll("(?i)\\bvarchar\\b(?!\\s*\\()", "STRING")
       .replaceAll("(?i)\\bdatetime\\b", "TIMESTAMP")
 
+  /** `db.name` or `name` → the catalog identifier (lower-case, as the
+    * session catalog stores it; the current database when unqualified). */
+  private def identifier(tbl: String): TableIdentifier = {
+    val parts = tbl.toLowerCase.split("\\.")
+    if (parts.length == 2) TableIdentifier(parts(1), Some(parts(0)))
+    else TableIdentifier(parts(0), Some(spark.sessionState.catalog.getCurrentDatabase))
+  }
+
   /** `ENGINE = Remote` (and bare CREATEs under `SET default_engine =
     * remote`, the reference's distributed-build default): the table's data
-    * lives in this session's STORE NODE (GraftSession.store — an
+    * lives in the SparkContext's STORE NODE (GraftSession.Store — an
     * HttpApiServer with the /v1/remote endpoints, the fusestore analogue)
     * and the catalog entry reads/writes it through the `graft-remote` DSv2
     * connector, so INSERT streams over the wire (staged append + commit)
     * and SELECT fetches splits with pushdown — remote_table.rs semantics
     * end to end. */
   private def remoteCreate(head: String, tbl: String, cols: String): String = {
-    recordNullability(tbl, cols)
-    val (srv, port, root) = GraftSession.store(spark)
-    val parts = tbl.split("\\.")
-    val (db, name) =
-      if (parts.length == 2) (parts(0), parts(1))
-      else (spark.catalog.currentDatabase, parts(0))
-    val key = s"${db}__$name"
-    val dir = s"$root/$db/$name"
-    val exists = try spark.catalog.tableExists(s"$db.$name")
-      catch { case _: Exception => false }
-    if (!exists) {
+    val store = GraftSession.storeOf(spark)
+    val id = identifier(tbl)
+    if (!spark.sessionState.catalog.tableExists(id)) {
       // fresh incarnation: a leftover dir from a dropped same-name table
       // must not resurrect its rows
-      graft.tables.Hfs.rmTree(new java.io.File(dir))
+      rmTree(new java.io.File(store.dir(id)))
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        mapRefTypes(cols).replaceAll("(?i)\\s+not\\s+null", ""))
-      srv.registerRemoteTable(key, dir, Some(schema))
+        notNullColumns(cols).replaceAll("(?i)\\s+not\\s+null", ""))
+      store.server.registerRemoteTable(store.key(id), store.dir(id), Some(schema))
     }
-    GraftSession.tableEngines(spark)(s"$db.$name".toLowerCase) = "remote"
-    s"$head (${notNullColumns(mapRefTypes(cols))}) USING `graft-remote` " +
-      s"OPTIONS (url 'http://127.0.0.1:$port', `table` '$key')"
-  }
-
-  private def recordEngine(tbl: String, label: String): Unit = {
-    val parts = tbl.split("\\.")
-    val (db, name) =
-      if (parts.length == 2) (parts(0), parts(1))
-      else (spark.catalog.currentDatabase, parts(0))
-    GraftSession.tableEngines(spark)(s"$db.$name".toLowerCase) = label
+    s"$head (${notNullColumns(cols)}) USING `graft-remote` " +
+      s"OPTIONS (url 'http://127.0.0.1:${store.port}', `table` '${store.key(id)}')" +
+      tableFacts(engineLabel("remote"), cols)
   }
 
   private def rewriteCreate(sql: String): Option[String] = sql.trim match {
@@ -167,22 +170,19 @@ class GraftSession(val spark: SparkSession) {
         case other => throw new IllegalArgumentException(s"unknown engine $other")
       }
       val optClause = if (opts.nonEmpty) opts.mkString(" OPTIONS (", ", ", ")") else ""
-      val headNN = head match {
-        case CreateHeadRe(h, tbl, cols) =>
-          recordNullability(tbl, cols)
-          recordEngine(tbl, engineLabel(engine))
-          s"$h (${notNullColumns(mapRefTypes(cols))})"
-        case _ => head
+      head match {
+        case CreateHeadRe(h, _, cols) =>
+          Some(s"$h (${notNullColumns(cols)}) USING $using$optClause" +
+            tableFacts(engineLabel(engine), cols))
+        case _ => Some(s"$head USING $using$optClause")
       }
-      Some(s"$headNN USING $using$optClause")
     // bare CREATE under the remote default engine (the reference's
     // distributed build defaults to the remote/fusestore engine — the 09_*
     // suites' CREATEs carry no ENGINE clause)
     case CreateHeadRe(h, tbl, cols)
-        if settings.get("default_engine").exists(_.equalsIgnoreCase("remote")) =>
+        if spark.conf.getOption("default_engine").exists(_.equalsIgnoreCase("remote")) =>
       Some(remoteCreate(h, tbl, cols))
     case CreateDbRe(create) => Some(create) // ENGINE=Local is the only engine
-    case DropDbRe(drop) => Some(s"$drop CASCADE") // reference drops tables too
     case _ => None
   }
 
@@ -211,24 +211,27 @@ class GraftSession(val spark: SparkSession) {
 
   private def describe(table: String): DataFrame = {
     import spark.implicits._
-    val nn = declaredNotNull.getOrElse(table.toLowerCase,
-      declaredNotNull.getOrElse(table.split("\\.").last.toLowerCase, Set.empty[String]))
-    spark.table(table).schema.fields.toSeq
+    val schema = spark.table(table).schema // throws first if the table is absent
+    // the session catalog keeps table properties for `[db.]name` only
+    val notNull =
+      if (table.count(_ == '.') > 1) None
+      else spark.sessionState.catalog
+        .getTempViewOrPermanentTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
+        .properties.get(GraftSession.NotNullProperty).map(_.split(',').toSet)
+    schema.fields.toSeq
       .map { f =>
-        val nullable = if (nn.nonEmpty) !nn.contains(f.name.toLowerCase) else f.nullable
+        val nullable = notNull.fold(f.nullable)(nn => !nn.contains(f.name.toLowerCase))
         (f.name, refTypeName(f.dataType), if (nullable) "YES" else "NO")
       }
       .toDF("Field", "Type", "Null")
   }
 
-  /** Engine settings registry (sessions/settings.rs): `SET name = value` for
-    * dot-free reference setting names lands here instead of Spark's conf;
-    * `max_threads` maps onto the one Spark knob with the same meaning for a
-    * local pipeline. Reference SET produces no result rows. Per-SparkSession
-    * (so `system.settings`/SHOW SETTINGS can surface it). */
-  val settings: scala.collection.mutable.Map[String, String] =
-    GraftSession.settingsRegistry(spark)
-
+  /** Engine settings (sessions/settings.rs): `SET name = value` with a
+    * dot-free reference setting name sets `name` in this session's conf;
+    * `max_threads` also sets the one Spark knob with the same meaning for
+    * a local pipeline. Reference SET produces no result rows. Spark does
+    * not know these names, so a new session (a wire connection,
+    * [[GraftSession.forConnection]]) starts from their defaults. */
   private val SetRe = """(?is)^SET\s+([A-Za-z_][A-Za-z0-9_]*)\s*=\s*(.+?)\s*$""".r
 
   /** `EXPLAIN GRAPH <stmt>` (sql_parser.rs:196, plan_display.rs:18-34):
@@ -323,38 +326,36 @@ class GraftSession(val spark: SparkSession) {
   private val DropDbStmtRe =
     """(?is)^(DROP\s+DATABASE\s+(?:IF\s+EXISTS\s+)?([\w.]+))\s*$""".r
 
-  /** After a successful DROP, release the dialect-side artifacts: engine
-    * label, and — for Remote tables — the store registration and its data
-    * dir (the reference's drop reaches the store service the same way). */
-  private def releaseTable(db: String, name: String): Unit = {
-    val engines = GraftSession.tableEngines(spark)
-    val qual = s"$db.$name".toLowerCase
-    if (engines.remove(qual).contains("remote"))
-      GraftSession.storeIfStarted(spark).foreach { case (srv, _, root) =>
-        srv.dropRemoteTable(s"${db}__$name")
-        graft.tables.Hfs.rmTree(new java.io.File(s"$root/$db/$name"))
-      }
+  /** The Remote tables among `ids` (all in one database), read from the
+    * catalog before a DROP removes their entries: a successful DROP then
+    * releases their store registrations and data dirs
+    * ([[GraftSession.release]]; the reference's drop reaches the store
+    * service the same way). */
+  private def remoteTables(db: String, ids: => Seq[TableIdentifier]): Seq[TableIdentifier] = {
+    val catalog = spark.sessionState.catalog
+    if (!catalog.databaseExists(db)) Nil
+    else catalog.getTablesByName(ids)
+      .filter(_.properties.get(GraftSession.EngineProperty).contains(engineLabel("remote")))
+      .map(_.identifier)
   }
 
   private def sqlDispatch(text: String): DataFrame = text.trim.stripSuffix(";").trim match {
     case SetRe(key, value) if !key.contains(".") =>
-      settings(key.toLowerCase) = value
+      spark.conf.set(key.toLowerCase, value)
       if (key.equalsIgnoreCase("max_threads"))
         spark.conf.set("spark.sql.shuffle.partitions", value)
       spark.emptyDataFrame
     case DropTableStmtRe(whole, tbl) =>
+      val id = identifier(tbl)
+      val remote = remoteTables(id.database.get, Seq(id))
       val df = spark.sql(whole) // throws first if the table is absent
-      val parts = tbl.split("\\.")
-      val (db, name) =
-        if (parts.length == 2) (parts(0), parts(1))
-        else (spark.catalog.currentDatabase, parts(0))
-      releaseTable(db, name)
+      GraftSession.release(remote)
       df
     case DropDbStmtRe(whole, db) =>
+      val remote = remoteTables(db.toLowerCase, spark.sessionState.catalog
+        .listTables(db.toLowerCase, "*", includeLocalTempViews = false))
       val df = spark.sql(s"$whole CASCADE") // reference drops tables too
-      GraftSession.tableEngines(spark).keys
-        .filter(_.startsWith(db.toLowerCase + ".")).toSeq
-        .foreach(q => releaseTable(db, q.substring(db.length + 1)))
+      GraftSession.release(remote)
       df
     case DescRe(table) => describe(table)
     case ExplainGraphRe(inner) => explainGraph(inner)
@@ -377,11 +378,14 @@ class GraftSession(val spark: SparkSession) {
 object GraftSession {
   def apply(spark: SparkSession): GraftSession = new GraftSession(spark)
 
-  /** One dialect session per SparkSession (weakly held): construction
-    * installs the query listener (system views register lazily on use — the
+  /** One dialect session per driver SparkSession: construction installs
+    * the query listener (system views register lazily on use — the
     * catalog enumeration that once cost ~2-3 s per construction is gone).
     * Driver queries that enter through the SQL front door share the cached
-    * instance the way a real application holds one session. */
+    * instance the way a real application holds one session. The cached
+    * instance references its key, so an entry is never collected: this is
+    * for the few long-lived driver sessions, not for connections
+    * ([[forConnection]] caches nothing). */
   private val sessions = new java.util.WeakHashMap[SparkSession, GraftSession]
 
   def cached(spark: SparkSession): GraftSession = sessions.synchronized {
@@ -394,18 +398,22 @@ object GraftSession {
     * restatement of the reference's per-session `FuseQueryContext`
     * (fusequery/query/src/sessions/settings.rs:21-33, one settings object
     * per session): `root.newSession()` shares the SparkContext, cached
-    * blocks and the persistent catalog, but owns its SQLConf, current
-    * database, temp views and function registry — so one connection's
-    * `USE db` / `SET x = y` is invisible to every other connection. The
-    * new session carries the graft functions, rules and strategies
-    * already ([[graft.GraftExtensions]]). */
+    * blocks and the persistent catalog — with the engine label and NOT
+    * NULL columns every dialect CREATE records there — but owns its
+    * SQLConf, current database, temp views and function registry. So one
+    * connection's `USE db` / `SET x = y` is invisible to every other
+    * connection, and a table made on one connection looks the same on
+    * all. The new session carries the graft functions, rules and
+    * strategies already ([[graft.GraftExtensions]]). */
   def forConnection(root: SparkSession): GraftSession = {
     val s = root.newSession()
     // a fresh session starts from SparkConf defaults, not the root's RUNTIME
     // conf — inherit the server operator's tuning (ansi mode, shuffle
     // partitions, …) as the connection's STARTING point, the way a freshly
     // accepted reference session snapshots the server settings; the
-    // connection's own SETs then apply to its session only
+    // connection's own SETs then apply to its session only. Dialect
+    // settings (`max_threads`, …) are not Spark confs, so isModifiable is
+    // false for them and the connection starts from their defaults.
     val defaults = s.conf.getAll
     root.conf.getAll.foreach { case (k, v) =>
       if (defaults.get(k) != Some(v) && s.conf.isModifiable(k))
@@ -414,59 +422,58 @@ object GraftSession {
     new GraftSession(s)
   }
 
-  /** Per-session STORE NODE for ENGINE=Remote tables — the fusestore
-    * analogue: an HttpApiServer (its /v1/remote endpoints are the store
-    * API) plus a scratch root for table data, started lazily on the first
-    * remote CREATE. Weakly held; server threads are daemons. */
-  private val stores = new java.util.WeakHashMap[
-    SparkSession, (graft.server.HttpApiServer, Int, String)]
+  /** Table properties a dialect CREATE writes: the reference engine label
+    * (`system.tables`) and the comma-separated columns declared NOT NULL
+    * (`DESCRIBE`). */
+  private[graft] val EngineProperty = "graft.engine"
+  private[graft] val NotNullProperty = "graft.not_null"
 
-  def store(spark: SparkSession): (graft.server.HttpApiServer, Int, String) =
-    stores.synchronized {
-      var st = stores.get(spark)
-      if (st == null) {
-        val srv = new graft.server.HttpApiServer(spark)
-        val port = srv.start()
-        val root = java.nio.file.Files.createTempDirectory("graft-store").toString
-        st = (srv, port, root)
-        stores.put(spark, st)
-      }
-      st
+  /** What `system.settings` and the HTTP `/v1/configs` serve: the reference
+    * settings' defaults overlaid by everything this session's conf holds,
+    * `SET name = v` settings included, sorted by name. */
+  def settings(spark: SparkSession): Seq[(String, String)] =
+    (Map("max_threads" -> String.valueOf(Runtime.getRuntime.availableProcessors),
+      "max_block_size" -> "10000") ++ spark.conf.getAll).toSeq.sorted
+
+  /** The STORE NODE for ENGINE=Remote tables — the fusestore analogue: an
+    * HttpApiServer (its /v1/remote endpoints are the store API) plus a
+    * scratch root for table data. There is one per SparkContext, the scope
+    * of the catalog its tables are registered in: every session's Remote
+    * tables live on the same node, and a DROP on any session releases
+    * them. It starts on the first Remote CREATE, on a session of its own
+    * (no connection's SETs reach the serve side), and stops, its data root
+    * deleted, when the SparkContext ends. */
+  private final class Store(session: SparkSession) {
+    val server = new graft.server.HttpApiServer(session)
+    val port: Int = server.start()
+    private val root = java.nio.file.Files.createTempDirectory("graft-store").toFile
+    def key(id: TableIdentifier): String = s"${id.database.get}__${id.table}"
+    def dir(id: TableIdentifier): String = s"$root/${id.database.get}/${id.table}"
+    def stop(): Unit = { server.stop(); rmTree(root) }
+  }
+
+  private var store: Store = _ // guarded by GraftSession's monitor
+
+  /** The running store node, started on first use. SparkContext.stop
+    * delivers the application end before it returns, so a later context
+    * never sees the store of an earlier one. */
+  private def storeOf(spark: SparkSession): Store = synchronized {
+    if (store == null) {
+      store = new Store(spark.newSession())
+      spark.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+          GraftSession.synchronized { store.stop(); store = null }
+      })
     }
+    store
+  }
 
-  def storeIfStarted(spark: SparkSession)
-      : Option[(graft.server.HttpApiServer, Int, String)] =
-    stores.synchronized(Option(stores.get(spark)))
-
-  /** Reference engine label per dialect-created catalog table
-    * (`db.name` lowercase → "CSV"/"Parquet"/"remote"/…); `system.tables`
-    * overlays these on the Spark catalog's tableType. */
-  private val engineLabelMaps = new java.util.WeakHashMap[
-    SparkSession, scala.collection.mutable.Map[String, String]]
-
-  def tableEngines(spark: SparkSession): scala.collection.mutable.Map[String, String] =
-    engineLabelMaps.synchronized {
-      var m = engineLabelMaps.get(spark)
-      if (m == null) {
-        m = scala.collection.mutable.Map[String, String]()
-        engineLabelMaps.put(spark, m)
-      }
-      m
+  /** Release dropped Remote tables from the store: their registrations
+    * and data dirs. */
+  private def release(dropped: Seq[TableIdentifier]): Unit = synchronized {
+    if (store != null) dropped.foreach { id =>
+      store.server.dropRemoteTable(store.key(id))
+      rmTree(new java.io.File(store.dir(id)))
     }
-
-  /** One engine-settings map per SparkSession (weakly held). */
-  private val registries =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, String]]
-
-  def settingsRegistry(spark: SparkSession): scala.collection.mutable.Map[String, String] =
-    registries.synchronized {
-      var m = registries.get(spark)
-      if (m == null) {
-        m = scala.collection.mutable.Map(
-          "max_threads" -> String.valueOf(Runtime.getRuntime.availableProcessors),
-          "max_block_size" -> "10000")
-        registries.put(spark, m)
-      }
-      m
-    }
+  }
 }

@@ -35,32 +35,34 @@ object SystemTables {
 
   /** Catalog tables across ALL databases plus the virtual system tables
     * themselves (tables_table.rs lists them under database `system` with
-    * `System<Name>` engines); temp views are engine machinery, not tables. */
+    * `System<Name>` engines); temp views are engine machinery, not tables.
+    * The engine column is read from the shared catalog, so every session
+    * lists the same engines. */
   def tables(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    // dialect-created tables carry their reference engine label ("CSV",
-    // "remote", …) — tables_table.rs renders Table::engine(); Spark's
-    // tableType stands in for tables created outside the dialect
-    val labels = graft.sql.GraftSession.tableEngines(spark)
     // the session catalog, not the Catalog API, which runs each listing as
     // a Spark job; getTablesByName skips a table dropped since the listing
     val sc = spark.sessionState.catalog
     val catalog = sc.listDatabases().flatMap(db =>
       sc.getTablesByName(sc.listTables(db, "*", includeLocalTempViews = false))
         .map { t =>
-          val name = t.identifier.table
-          (db, name, labels.getOrElse(s"$db.$name".toLowerCase, t.tableType.name))
+          // a dialect-created table carries its reference engine label
+          // ("CSV", "remote", …) as a table property — tables_table.rs
+          // renders Table::engine(); Spark's tableType stands in for
+          // tables created outside the dialect
+          (db, t.identifier.table,
+            t.properties.getOrElse(graft.sql.GraftSession.EngineProperty, t.tableType.name))
         })
     val virtual = all.map(n => ("system", n, s"System${n.capitalize}"))
     (catalog ++ virtual).toDF("database", "name", "engine")
   }
 
+  /** The reference's settings table (system/settings_table.rs): the
+    * dialect settings and this session's conf, one row per name
+    * ([[graft.sql.GraftSession.settings]], which `/v1/configs` serves too). */
   def settings(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    // engine settings (SET max_threads=… registry) overlay the Spark conf,
-    // like the reference's settings table (system/settings_table.rs)
-    (spark.conf.getAll ++ graft.sql.GraftSession.settingsRegistry(spark).toMap)
-      .toSeq.sorted.toDF("name", "value")
+    graft.sql.GraftSession.settings(spark).toDF("name", "value")
   }
 
   /** The names `spark.catalog.listFunctions()` gives, without its two

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graft.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -198,12 +199,14 @@ class DriverLocalJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("system.tables lists what the Catalog API lists, without temp views") {
-    val labels = GraftSession.tableEngines(spark)
+    // a dialect-created table's engine label is a table property
+    def label(db: String, name: String, tableType: String) =
+      spark.sessionState.catalog.getTableMetadata(TableIdentifier(name, Some(db)))
+        .properties.getOrElse(GraftSession.EngineProperty, tableType)
     val viaApi = spark.catalog.listDatabases().collect().map(_.name).toSeq
       .flatMap(db => spark.catalog.listTables(db).collect().toSeq
         .filter(!_.isTemporary)
-        .map(t => Seq(db, t.name,
-          labels.getOrElse(s"$db.${t.name}".toLowerCase, t.tableType))))
+        .map(t => Seq(db, t.name, label(db, t.name, t.tableType))))
     val (rows, n) = counted(SystemTables.tables(spark).collect().toSeq)
     assert(n == 0)
     val listed = rows.map(r => Seq(r.getString(0), r.getString(1), r.getString(2)))
